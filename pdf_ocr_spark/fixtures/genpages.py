@@ -635,6 +635,47 @@ def make_scan_pdf(page_texts: List[str]) -> bytes:
     return w.build(catalog)
 
 
+def make_text_scan_pdf(lines: List[str], scan_text: str) -> bytes:
+    """Two pages: page 1 carries ``lines`` in its text layer, page 2 is
+    image-only (the :func:`make_scan_pdf` shape) — one document whose
+    pages take different branches, text and OCR."""
+    media = (612.0, 792.0)
+    w = _PdfWriter()
+    font_num = w.add(
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
+        b" /Encoding /WinAnsiEncoding >>"
+    )
+    catalog = w.reserve()
+    pages_num = w.reserve()
+    text_content = w.add_stream(b"", _simple_content(lines, media, 0))
+    img_num = w.add_stream(
+        b"/Type /XObject /Subtype /Image /Width 1275 /Height 1650"
+        b" /ColorSpace /DeviceGray /BitsPerComponent 8",
+        STUB_MARKER + scan_text.encode("utf-8") + b"\x00" + b"\xff" * 64,
+        compress=False,
+    )
+    scan_content = w.add_stream(b"", b"q\n612 0 0 792 0 0 cm\n/Im1 Do\nQ\n")
+    page_nums = [
+        w.add(
+            b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R"
+            b" /Resources << /Font << /F1 %d 0 R >> >> >>"
+            % (pages_num, text_content, font_num)
+        ),
+        w.add(
+            b"<< /Type /Page /Parent %d 0 R /Contents %d 0 R"
+            b" /Resources << /XObject << /Im1 %d 0 R >> >> >>"
+            % (pages_num, scan_content, img_num)
+        ),
+    ]
+    w.fill(catalog, b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num)
+    w.fill(
+        pages_num,
+        b"<< /Type /Pages /Kids [%d 0 R %d 0 R] /Count 2"
+        b" /MediaBox [0 0 612 792] >>" % tuple(page_nums),
+    )
+    return w.build(catalog)
+
+
 def make_scan_pdf_inline(page_texts: List[str]) -> bytes:
     """Pages whose ONLY content is an INLINE image (``BI … ID … EI``,
     PDF 32000-1 §8.9.7) — the scanner-PDF shape where the page scan is

@@ -13,10 +13,10 @@ partition-local).  The HOT PATH is fully fused:
          inside the UDF rather than as a shuffle)
      → sink: parquet (Iceberg-compatible layout) + lineage sidecar
 
-A page-level route (``extract_batch`` → ``ocr_batch`` →
-``assemble_documents``) is kept as the page-table API and as the
-semantics oracle for the fused path; tests assert both emit identical
-documents.
+The page table (``extract_pages``) and the giant-document page-range
+stage of ``extract_documents_split`` run the same plan shape over the
+SAME parse-and-OCR core (``_parse_batch``); only the emitter differs
+(one row per page instead of one per document).
 
 Resume (J3, the north rule): restarts anti-join the input against the
 already-committed output's urls — only the remainder is processed.
@@ -35,10 +35,10 @@ from typing import Iterator, Optional
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -48,6 +48,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_ocr_spark.kernels.pdf.extract import page_header
+
 PAGE_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -55,8 +57,7 @@ PAGE_SCHEMA = StructType(
         StructField("page", IntegerType()),         # 1-based; 0 for doc-level failure
         StructField("page_text", StringType()),
         StructField("n_blocks", IntegerType()),
-        StructField("needs_ocr", BooleanType()),
-        StructField("ocr_payload", BinaryType()),
+        StructField("needs_ocr", BooleanType()),    # True on every OCR'd page
         StructField("status", StringType()),        # 'ok' | 'failed'
         StructField("failure_reason", StringType()),
         StructField("n_bytes", LongType()),         # input payload size
@@ -142,92 +143,6 @@ def _tune_worker_gc() -> None:
     _GC_TUNED = True
 
 
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched document extractor (runs on executors).
-
-    One call per Arrow batch; per-document try/except so a poison row
-    yields a lineage row, never a task failure (SURVEY.md §4.1)."""
-    # imports inside: the function must be self-contained for pickling
-    from pdf_ocr_spark.kernels.html_extract import extract_html
-    from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
-
-    _tune_worker_gc()
-
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            n_bytes = len(data)
-            try:
-                if looks_like_pdf(data):
-                    doc = extract_pdf(data)
-                    if doc.status != "ok":
-                        rows.append(
-                            (url, "pdf", 0, None, 0, False, None,
-                             "failed", doc.failure_reason, n_bytes)
-                        )
-                        continue
-                    for p in doc.pages:
-                        rows.append(
-                            (url, "pdf", p.page_num,
-                             None if p.needs_ocr else p.text,
-                             p.n_blocks, p.needs_ocr, p.ocr_payload,
-                             "ok", None, n_bytes)
-                        )
-                else:
-                    text, status, reason = extract_html(data)
-                    rows.append(
-                        (url, "html", 1, text if status == "ok" else None,
-                         text.count("\n") + 1 if text else 0, False, None,
-                         status, reason, n_bytes)
-                    )
-            except Exception as e:  # noqa: BLE001 — poison-row isolation
-                rows.append(
-                    (url, "unknown", 0, None, 0, False, None,
-                     "failed", f"kernel_crash: {type(e).__name__}", n_bytes)
-                )
-        yield pd.DataFrame(rows, columns=[f.name for f in PAGE_SCHEMA.fields])
-
-
-def ocr_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Batched OCR inference over image-only pages (K2).
-
-    The engine is initialized lazily once per executor python worker —
-    the reference's load-model-once pattern
-    (/root/reference/parse_student_answers.py:143-175).  In production the
-    stub is swapped for a PaddleOCR/vLLM client; batching shape
-    (many pages per call) mirrors the remote-VLM script's per-page calls
-    amortized per partition
-    (/root/reference/pdf_ocr_with_silicon_remote_vllm.py:162-232)."""
-    from pdf_ocr_spark.kernels.ocr_stub import get_engine, ocr_page_text
-
-    engine = get_engine()
-    for pdf_batch in batches:
-        mask = pdf_batch["needs_ocr"].fillna(False).astype(bool)
-        if not mask.any():
-            # pure pass-through batch: no inference, no copies
-            yield pdf_batch.assign(ocr_payload=None)
-            continue
-        images = [
-            bytes(b) if b is not None else None
-            for b in pdf_batch.loc[mask, "ocr_payload"]
-        ]
-        results = engine.recognize_batch(images)
-        texts = [ocr_page_text(boxes) for boxes in results]
-        out = pdf_batch.copy()
-        for i, t in zip(out.index[mask], texts):
-            if t is None:  # engine failure marker — NOT a blank page
-                out.loc[i, "status"] = "failed"
-                out.loc[i, "failure_reason"] = OCR_FAILED_REASON
-            else:
-                out.loc[i, "page_text"] = t
-        # needs_ocr stays True as the was-OCR marker (the text is filled in)
-        # so assemble_documents / lineage_metrics count n_ocr_pages the same
-        # on every route — matches extract_range_batch's contract
-        out["ocr_payload"] = None
-        yield out
-
-
 DOC_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -244,133 +159,175 @@ DOC_SCHEMA = StructType(
 )
 
 
-def _assemble_doc(
-    url: str,
-    kind: str,
-    pages: list,  # [(page_num, text_or_None, n_blocks)] in page order
-    status: str,
-    reason,
-    n_bytes: int,
-    n_ocr: int = 0,
-) -> tuple:
-    """Kernel-side twin of :func:`assemble_documents` — MUST keep the
-    byte-identical text semantics (v2's '# 第 {i} 页\\n\\n…\\n\\n' chunks
-    for PDFs, raw concatenation for unpaginated HTML)."""
-    if status == "failed":
-        return (url, kind, None, 0, 0, 0, "failed", reason, n_bytes, 0)
-    pages = sorted(pages, key=lambda p: p[0])
-    if kind == "pdf":
-        text = "".join(
-            "# 第 %d 页\n\n%s\n\n" % (p, t if t is not None else "")
-            for p, t, _ in pages
-        )
-    else:
-        text = "".join(t if t is not None else "" for _, t, _ in pages)
-    n_pages = max(p for p, _, _ in pages)
-    n_blocks = sum(b for _, _, b in pages)
-    return (url, kind, text, n_pages, n_blocks, len(text), "ok", None, n_bytes, n_ocr)
+# per-page OCR outcome recorded by _parse_batch
+_TEXT_PAGE = 0    # the text layer carried the page; no OCR
+_OCRD = 1         # image-only page, recognized
+_OCR_GAVE_UP = 2  # image-only page, the engine failed after retries
 
 
-def _parse_batch(urls, payloads, engine):
-    """Shared fused-extractor core: parse + batched OCR + per-doc
-    assembly for one batch of documents.  Returns (doc_rows, engine).
+def _parse_batch(urls, payloads, engine, ranges=None):
+    """The one parse-and-OCR core of the document, page and page-range
+    routes: parse every document of one batch, then send all its
+    image-only pages to the engine as ONE ``recognize_batch`` call (the
+    batched-inference pattern of the reference's remote-VLM script,
+    pdf_ocr_with_silicon_remote_vllm.py:162-232).
 
-    OCR batching semantics: all image-only pages of the batch go to the
-    engine as ONE ``recognize_batch`` call (the reference's
-    batched-inference pattern,
-    /root/reference/pdf_ocr_with_silicon_remote_vllm.py:162-232)."""
+    Returns ``(docs, engine)``.  Each doc is a record
+    ``(url, kind, pages, status, reason, n_bytes)``; ``pages`` holds
+    ``[page_num, text, n_blocks, ocr]`` in page order, ``ocr`` being
+    ``_TEXT_PAGE``, ``_OCRD`` or ``_OCR_GAVE_UP`` (text None).  A doc
+    that failed as a whole has no pages.
+
+    ``ranges`` (one ``(page_lo, page_hi)`` per row) is the giant-document
+    route: every row is parsed as a PDF restricted to its range, keeping
+    GLOBAL page numbers, and a crash is typed ``pdf``, not ``unknown``."""
     from pdf_ocr_spark.kernels.html_extract import extract_html
     from pdf_ocr_spark.kernels.ocr_stub import get_engine, ocr_page_text
     from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
 
-    docs = []  # (url, kind, pages[(num,text,n_blocks)], status, reason, n_bytes)
-    ocr_jobs = []  # (doc_idx, page_slot, payload)
-    for url, payload in zip(urls, payloads):
+    docs = []
+    ocr_jobs = []  # (page record, payload)
+    for i, (url, payload) in enumerate(zip(urls, payloads)):
         data = bytes(payload) if payload is not None else b""
         n_bytes = len(data)
         try:
-            if looks_like_pdf(data):
-                doc = extract_pdf(data)
+            if ranges is not None or looks_like_pdf(data):
+                if ranges is None:
+                    doc = extract_pdf(data)
+                else:
+                    doc = extract_pdf(data, *ranges[i])
                 if doc.status != "ok":
                     docs.append((url, "pdf", [], "failed", doc.failure_reason, n_bytes))
                     continue
                 pages = []
                 for p in doc.pages:
                     if p.needs_ocr:
-                        ocr_jobs.append((len(docs), len(pages), p.ocr_payload))
-                        pages.append([p.page_num, None, p.n_blocks])
+                        page = [p.page_num, None, p.n_blocks, _OCRD]
+                        ocr_jobs.append((page, p.ocr_payload))
                     else:
-                        pages.append([p.page_num, p.text, p.n_blocks])
+                        page = [p.page_num, p.text, p.n_blocks, _TEXT_PAGE]
+                    pages.append(page)
                 docs.append((url, "pdf", pages, "ok", None, n_bytes))
             else:
                 text, status, reason = extract_html(data)
                 n_blocks = text.count("\n") + 1 if text else 0
                 docs.append(
                     (url, "html",
-                     [[1, text if status == "ok" else None, n_blocks]],
+                     [[1, text if status == "ok" else None, n_blocks, _TEXT_PAGE]],
                      status, reason, n_bytes)
                 )
         except Exception as e:  # noqa: BLE001 — poison-row isolation
             docs.append(
-                (url, "unknown", [], "failed",
+                (url, "unknown" if ranges is None else "pdf", [], "failed",
                  f"kernel_crash: {type(e).__name__}", n_bytes)
             )
-    ocr_counts = [0] * len(docs)
     if ocr_jobs:
         if engine is None:
             engine = get_engine()
-        results = engine.recognize_batch([p for _, _, p in ocr_jobs])
-        for (di, slot, _), boxes in zip(ocr_jobs, results):
-            text = ocr_page_text(boxes)
-            if text is None:  # engine failure after retries → typed failure
-                u, k, _pages, _s, _r, nb = docs[di]
-                docs[di] = (u, k, [], "failed", OCR_FAILED_REASON, nb)
-                continue
-            if docs[di][3] == "failed":
-                continue  # a sibling page already failed this document
-            docs[di][2][slot][1] = text
-            ocr_counts[di] += 1
-    return [_assemble_doc(*d, n_ocr=c) for d, c in zip(docs, ocr_counts)], engine
+        results = engine.recognize_batch([p for _, p in ocr_jobs])
+        for (page, _), boxes in zip(ocr_jobs, results):
+            page[1] = ocr_page_text(boxes)
+            if page[1] is None:  # engine failure after retries, NOT a blank page
+                page[3] = _OCR_GAVE_UP
+    return docs, engine
 
 
-def extract_docs_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused document extractor, pandas flavor (``mapInPandas``)."""
+def _assemble_doc(
+    url: str, kind: str, pages: list, status: str, reason, n_bytes: int
+) -> tuple:
+    """Document-row emitter over one :func:`_parse_batch` record — the
+    kernel-side twin of :func:`assemble_documents`, and MUST keep its
+    byte-identical text semantics (v2's page chunks for PDFs, raw
+    concatenation for unpaginated HTML).  The first OCR failure fails
+    the whole document with the typed, retryable reason."""
+    if status == "ok" and any(pg[3] == _OCR_GAVE_UP for pg in pages):
+        status, reason = "failed", OCR_FAILED_REASON
+    if status == "failed":
+        return (url, kind, None, 0, 0, 0, "failed", reason, n_bytes, 0)
+    pages = sorted(pages, key=lambda pg: pg[0])
+    if kind == "pdf":
+        text = "".join(
+            page_header(p, t if t is not None else "") for p, t, _, _ in pages
+        )
+    else:
+        text = "".join(t if t is not None else "" for _, t, _, _ in pages)
+    n_pages = max(pg[0] for pg in pages)
+    n_blocks = sum(pg[2] for pg in pages)
+    n_ocr = sum(pg[3] == _OCRD for pg in pages)
+    return (url, kind, text, n_pages, n_blocks, len(text), "ok", None, n_bytes, n_ocr)
+
+
+def _page_rows(docs) -> list:
+    """PAGE_SCHEMA emitter over :func:`_parse_batch` records: a document
+    that failed as a whole gives one ``page=0`` row; an OCR-failed page
+    fails only its own row; ``needs_ocr`` stays True on every OCR'd page
+    (the was-OCR marker lineage counts)."""
+    rows = []
+    for url, kind, pages, status, reason, n_bytes in docs:
+        if status == "failed" and not pages:
+            rows.append((url, kind, 0, None, 0, False, status, reason, n_bytes))
+        for num, text, n_blocks, ocr in pages:
+            if ocr == _OCR_GAVE_UP:
+                rows.append((url, kind, num, None, n_blocks, True,
+                             "failed", OCR_FAILED_REASON, n_bytes))
+            else:
+                rows.append((url, kind, num, text, n_blocks, ocr == _OCRD,
+                             status, reason, n_bytes))
+    return rows
+
+
+def _parsed_batches(batches, ranged: bool = False):
+    """Run the core over Arrow batches of (url, html[, page_lo, page_hi]),
+    yielding ``(input batch, doc records)``; the OCR engine is made once
+    per python worker, on the first batch that needs it."""
     _tune_worker_gc()
     engine = None
-    for pdf_batch in batches:
-        rows, engine = _parse_batch(pdf_batch["url"], pdf_batch["html"], engine)
-        yield pd.DataFrame(rows, columns=[f.name for f in DOC_SCHEMA.fields])
+    for rb in batches:
+        ranges = (
+            list(zip(rb.column(2).to_pylist(), rb.column(3).to_pylist()))
+            if ranged else None
+        )
+        docs, engine = _parse_batch(
+            rb.column(0).to_pylist(), rb.column(1).to_pylist(), engine, ranges
+        )
+        yield rb, docs
+
+
+def _record_batch(rows: list, schema: StructType):
+    """Row tuples → one Arrow record batch typed from the Spark schema —
+    the batch builder of every ``mapInArrow`` body over the core."""
+    import pyarrow as pa
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
+    return pa.record_batch(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
 
 
 def extract_docs_arrow(batches):
-    """Fused document extractor, Arrow flavor (``mapInArrow``) — the HOT
-    path: skips the pandas construction/conversion on both sides of the
-    worker (measured +10–18% pipeline throughput over ``mapInPandas`` at
-    8/32 cores on the synthetic corpus).
+    """Document route (``mapInArrow``) — the HOT path: one doc row per
+    input row, in input order.  The explicit ``repartition(xxhash64(url))``
+    co-locates whole documents, so the per-url aggregation is
+    partition-local by construction and runs here, inside the UDF, with
+    no groupBy and no second Arrow round-trip."""
+    for _, docs in _parsed_batches(batches):
+        yield _record_batch([_assemble_doc(*d) for d in docs], DOC_SCHEMA)
 
-    The page-level route (``extract_batch`` → ``ocr_batch`` →
-    ``assemble_documents``) round-trips every page row through Arrow twice
-    and shuffles again for the groupBy; but the explicit
-    ``repartition(xxhash64(url))`` already co-locates whole documents, so
-    the aggregation is partition-local by construction and runs inside
-    this UDF."""
-    import pyarrow as pa
 
-    _tune_worker_gc()
-    engine = None
-    types = (
-        pa.string(), pa.string(), pa.string(), pa.int32(), pa.int32(),
-        pa.int32(), pa.string(), pa.string(), pa.int64(), pa.int32(),
-    )
-    names = [f.name for f in DOC_SCHEMA.fields]
-    for rb in batches:
-        rows, engine = _parse_batch(
-            rb.column(0).to_pylist(), rb.column(1).to_pylist(), engine
-        )
-        cols = list(zip(*rows)) if rows else [[] for _ in names]
-        yield pa.record_batch(
-            [pa.array(c, t) for c, t in zip(cols, types)], names=names
-        )
+def extract_pages_arrow(batches):
+    """Page route (``mapInArrow``): PAGE_SCHEMA rows over the same core."""
+    for _, docs in _parsed_batches(batches):
+        yield _record_batch(_page_rows(docs), PAGE_SCHEMA)
+
+
+def extract_range_arrow(batches):
+    """Page-range route for giant documents: each input row is
+    (url, html, page_lo, page_hi); emits PAGE_SCHEMA rows with GLOBAL
+    page numbers, for :func:`assemble_documents` to re-merge."""
+    for _, docs in _parsed_batches(batches, ranged=True):
+        yield _record_batch(_page_rows(docs), PAGE_SCHEMA)
 
 
 BLOCK_SCHEMA = StructType(
@@ -442,6 +399,20 @@ def extract_blocks_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
         yield pd.DataFrame(rows, columns=cols)
 
 
+def salted_repartition(
+    df: DataFrame, num_partitions: Optional[int] = None, keys: tuple = ("url",)
+) -> DataFrame:
+    """The job's single planned shuffle: ``repartition(P, xxhash64(keys))``
+    with the parallelism floor ``P = max(defaultParallelism, 8)`` unless
+    given.  It spreads documents uniformly regardless of input file
+    layout, bounding skew from giant payloads (SURVEY.md §4.1).  Changing
+    the salting or the floor happens HERE, once, for every batch and
+    streaming route."""
+    if num_partitions is None:
+        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    return df.repartition(num_partitions, F.xxhash64(*keys))
+
+
 def kernel_route(
     pages_df: DataFrame,
     batch_fn,
@@ -451,16 +422,9 @@ def kernel_route(
     num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """The shared plan shape of every kernel extraction route: scan
-    pruned to ``cols`` → ONE salted repartition on ``xxhash64(key)``
-    (bounds giant-payload skew; the job's single planned shuffle) → one
-    python stage running ``batch_fn``.  Changing the salting key or the
-    parallelism floor happens HERE, once, for all routes."""
-    df = pages_df.select(*cols)
-    if num_partitions is None:
-        num_partitions = max(
-            pages_df.sparkSession.sparkContext.defaultParallelism, 8
-        )
-    df = df.repartition(num_partitions, F.xxhash64(key))
+    pruned to ``cols`` → ONE :func:`salted_repartition` on ``key`` → one
+    python stage running ``batch_fn``."""
+    df = salted_repartition(pages_df.select(*cols), num_partitions, (key,))
     return df.mapInPandas(batch_fn, schema=schema)
 
 
@@ -1127,22 +1091,13 @@ def extract_pages(
     pages_df: DataFrame,
     num_partitions: Optional[int] = None,
 ) -> DataFrame:
-    """pages(url, html, …) → page-level extraction rows.
+    """pages(url, html, …) → page-level extraction rows (PAGE_SCHEMA).
 
-    The explicit ``repartition(P, xxhash64(url))`` is the job's single
-    planned shuffle: it spreads documents uniformly regardless of input
-    file layout, bounding skew from giant PDFs (SURVEY.md §4.1)."""
-    df = pages_df.select("url", "html")
-    if num_partitions is None:
-        num_partitions = max(pages_df.sparkSession.sparkContext.defaultParallelism, 8)
-    df = df.repartition(num_partitions, F.xxhash64("url"))
-    extracted = df.mapInPandas(extract_batch, schema=PAGE_SCHEMA)
-
-    # OCR stage: a pass-through mapInPandas on the SAME partitioning — no
-    # shuffle, no branch (a filter+union here would execute the expensive
-    # extractor twice); batches with no image-only pages flow through
-    # untouched, batches with them run one batched inference call
-    return extracted.mapInPandas(ocr_batch, schema=PAGE_SCHEMA)
+    The document route's plan shape: scan pruned to (url, html) → the
+    salted repartition → ONE mapInArrow stage over the shared
+    parse-and-OCR core, emitting a row per page instead of per doc."""
+    df = salted_repartition(pages_df.select("url", "html"), num_partitions)
+    return df.mapInArrow(extract_pages_arrow, schema=PAGE_SCHEMA)
 
 
 def assemble_documents(page_rows: DataFrame) -> DataFrame:
@@ -1169,7 +1124,7 @@ def assemble_documents(page_rows: DataFrame) -> DataFrame:
         F.max("n_bytes").alias("n_bytes"),
         F.sum(F.when(F.col("needs_ocr"), 1).otherwise(0))
         .cast("int")
-        .alias("n_ocr_pages"),  # range route keeps needs_ocr as was-OCR marker
+        .alias("n_ocr_pages"),  # needs_ocr is the was-OCR marker
     )
     pdf_text = F.array_join(
         F.transform(
@@ -1214,20 +1169,8 @@ def extract_documents(
     mapInArrow stage (parse + batched OCR + per-doc assembly).  A single
     shuffle total; no groupBy, no second Arrow round-trip, no pandas
     layer in the worker."""
-    df = pages_df.select("url", "html")
-    if num_partitions is None:
-        num_partitions = max(pages_df.sparkSession.sparkContext.defaultParallelism, 8)
-    df = df.repartition(num_partitions, F.xxhash64("url"))
+    df = salted_repartition(pages_df.select("url", "html"), num_partitions)
     return df.mapInArrow(extract_docs_arrow, schema=DOC_SCHEMA)
-
-
-def extract_documents_paged(
-    pages_df: DataFrame, num_partitions: Optional[int] = None
-) -> DataFrame:
-    """Page-level route (extract → OCR stage → groupBy assemble).  Kept
-    for the page-table API and as the semantics oracle for the fused
-    path — tests assert both produce identical rows."""
-    return assemble_documents(extract_pages(pages_df, num_partitions))
 
 
 RANGE_SCHEMA = StructType(
@@ -1256,58 +1199,6 @@ def count_pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
         )
 
 
-def extract_range_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Page-range extractor for giant documents: each input row is
-    (url, html, page_lo, page_hi); emits PAGE_SCHEMA rows with GLOBAL page
-    numbers.  OCR runs inline (batched) like the fused extractor;
-    ``needs_ocr`` is kept True on OCR'd rows as a was-OCR marker for
-    lineage (the text is already filled in)."""
-    from pdf_ocr_spark.kernels.ocr_stub import get_engine, ocr_page_text
-    from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
-
-    _tune_worker_gc()
-    engine = None
-    cols = [f.name for f in PAGE_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        ocr_slots = []  # (row_idx, payload)
-        for url, payload, lo, hi in zip(
-            pdf_batch["url"], pdf_batch["html"],
-            pdf_batch["page_lo"], pdf_batch["page_hi"],
-        ):
-            data = bytes(payload) if payload is not None else b""
-            n_bytes = len(data)
-            try:
-                doc = extract_pdf(data, int(lo), int(hi))
-                if doc.status != "ok":
-                    rows.append((url, "pdf", 0, None, 0, False, None,
-                                 "failed", doc.failure_reason, n_bytes))
-                    continue
-                for p in doc.pages:
-                    if p.needs_ocr:
-                        ocr_slots.append((len(rows), p.ocr_payload))
-                        rows.append([url, "pdf", p.page_num, None, p.n_blocks,
-                                     True, None, "ok", None, n_bytes])
-                    else:
-                        rows.append((url, "pdf", p.page_num, p.text, p.n_blocks,
-                                     False, None, "ok", None, n_bytes))
-            except Exception as e:  # noqa: BLE001
-                rows.append((url, "pdf", 0, None, 0, False, None,
-                             "failed", f"kernel_crash: {type(e).__name__}", n_bytes))
-        if ocr_slots:
-            if engine is None:
-                engine = get_engine()
-            results = engine.recognize_batch([p for _, p in ocr_slots])
-            for (ri, _), boxes in zip(ocr_slots, results):
-                text = ocr_page_text(boxes)
-                if text is None:  # engine failure marker → typed failure
-                    rows[ri][7] = "failed"
-                    rows[ri][8] = OCR_FAILED_REASON
-                else:
-                    rows[ri][3] = text
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def extract_documents_split(
     pages_df: DataFrame,
     num_partitions: Optional[int] = None,
@@ -1325,9 +1216,6 @@ def extract_documents_split(
     independent tasks instead of one straggler — and a groupBy(url)
     re-merge.  The split threshold is by payload size (known before any
     parse), the split unit by page count (known after the cheap pass)."""
-    spark = pages_df.sparkSession
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
     src = pages_df.select("url", "html")
     # null-safe: NULL html must take the normal path (extract_documents
     # emits its typed failure row) — a bare length() >= N predicate is NULL
@@ -1357,9 +1245,9 @@ def extract_documents_split(
         )
         .withColumn("page_hi", F.col("page_lo") + F.lit(pages_per_task - 1))
     )
-    page_rows = ranges.repartition(
-        num_partitions, F.xxhash64("url", "page_lo")
-    ).mapInPandas(extract_range_batch, schema=PAGE_SCHEMA)
+    page_rows = salted_repartition(
+        ranges, num_partitions, ("url", "page_lo")
+    ).mapInArrow(extract_range_arrow, schema=PAGE_SCHEMA)
     # failed count-pass giants (n_pages == 0) still need a failure row
     failed_giants = (
         giants.join(counts, "url")

@@ -3099,7 +3099,7 @@ f AS (
 ),
 a AS (
   SELECT domain, count(*) AS n_docs,
-         count(*) - sum(pass) AS n_gate_fail,
+         CAST(count(*) - sum(pass) AS BIGINT) AS n_gate_fail,
          count(DISTINCT fp) AS n_distinct,
          sum(words) AS sum_words
   FROM f GROUP BY 1
@@ -3595,10 +3595,10 @@ j4 AS (
 ),
 one AS (
   SELECT count(*) AS n0,
-         sum(CAST(s1 AS BIGINT)) AS n1,
-         sum(CAST(s2 AS BIGINT)) AS n2,
-         sum(CAST(s3 AS BIGINT)) AS n3,
-         sum(CAST(s4 AS BIGINT)) AS n4
+         CAST(sum(CAST(s1 AS BIGINT)) AS BIGINT) AS n1,
+         CAST(sum(CAST(s2 AS BIGINT)) AS BIGINT) AS n2,
+         CAST(sum(CAST(s3 AS BIGINT)) AS BIGINT) AS n3,
+         CAST(sum(CAST(s4 AS BIGINT)) AS BIGINT) AS n4
   FROM j4
 )
 SELECT '1_gopher_gate' AS stage, n0 AS n_in, n0 - n1 AS n_dropped, n1 AS n_out FROM one
@@ -4771,7 +4771,9 @@ def q_quality_nb_weights(spark, sf_dir):
 
 SQL_QUALITY_NB_WEIGHTS = f"""
 WITH {_SQL_NB_MODEL}
-SELECT bucket, pos_cnt, neg_cnt, CAST(weight AS DOUBLE) AS weight FROM model
+SELECT bucket, CAST(pos_cnt AS BIGINT) AS pos_cnt,
+       CAST(neg_cnt AS BIGINT) AS neg_cnt, CAST(weight AS DOUBLE) AS weight
+FROM model
 """
 
 
@@ -4970,7 +4972,7 @@ p AS (
   SELECT cnt, unnest(list_zip(syms[1:len(syms)-1], syms[2:len(syms)])) AS pr
   FROM s
 )
-SELECT pr[1] AS l, pr[2] AS r, sum(cnt) AS freq
+SELECT pr[1] AS l, pr[2] AS r, CAST(sum(cnt) AS BIGINT) AS freq
 FROM p GROUP BY 1, 2
 ORDER BY freq DESC, l ASC, r ASC
 LIMIT 50
@@ -5063,7 +5065,7 @@ sub AS (
            AS piece
   FROM pos
 )
-SELECT piece, sum(cnt) AS freq
+SELECT piece, CAST(sum(cnt) AS BIGINT) AS freq
 FROM sub GROUP BY 1
 ORDER BY freq DESC, piece ASC
 LIMIT 50
@@ -5902,7 +5904,8 @@ SQL_CRAWL_TRAPS = (
   FROM tc
 ),
 dom AS (
-  SELECT domain, sum(n_distinct_urls) AS n_urls, count(*) AS n_templates
+  SELECT domain, CAST(sum(n_distinct_urls) AS BIGINT) AS n_urls,
+         count(*) AS n_templates
   FROM tc GROUP BY domain
 )
 SELECT d.domain, d.n_urls, d.n_templates,
@@ -7989,7 +7992,7 @@ SQL_ANCHOR_TEXT_PROFILE = f"""
 WITH e AS (SELECT * FROM read_parquet('{_golden("link_edges")}')),
 c AS (
   SELECT link AS dst, count(*) AS n_inlinks,
-         sum(CASE WHEN NOT nofollow THEN 1 ELSE 0 END) AS n_follow,
+         CAST(sum(CASE WHEN NOT nofollow THEN 1 ELSE 0 END) AS BIGINT) AS n_follow,
          count(DISTINCT url) AS n_src_pages
   FROM e GROUP BY 1
 ),
@@ -9303,37 +9306,9 @@ def q_link_communities(spark, sf_dir):
     link-farm clusters joined by a stray edge.  Deterministic
     (synchronous update, min-label tie-break, no RNG); the oracle
     unrolls both rounds as SQL over the identical graph."""
-    from pdf_ocr_spark.operators.graph import host_graph, label_propagation
+    from pdf_ocr_spark.operators.graph import label_propagation
 
-    extracted = spark.read.parquet(_golden("link_edges")).select(
-        "url", "link", "nofollow"
-    )
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    i = F.col("doc_id")
-    src = F.concat(
-        F.lit("https://site"), (i % 11).cast("string"),
-        F.lit(".example.org/page/"), i.cast("string"),
-    )
-    m = i % 5
-    link = (
-        F.when(m == 0, F.concat(
-            F.lit("https://site"), ((i * 3) % 11).cast("string"),
-            F.lit(".example.org/x/"), i.cast("string")))
-        .when(m == 1, F.concat(F.lit("/local/"), (i % 7).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("mailto:user"), i.cast("string"), F.lit("@example.org")))
-        .when(m == 3, F.concat(
-            F.lit("HTTPS://CDN.Example.NET:8080/asset?id="),
-            (i % 13).cast("string")))
-        .otherwise(F.concat(
-            F.lit("https://u:p@site"), (i % 4).cast("string"),
-            F.lit(".example.org/auth")))
-    )
-    synth = d.select(
-        src.alias("url"), link.alias("link"),
-        (i % 3 == 0).alias("nofollow"),
-    )
-    hg = host_graph(extracted.unionByName(synth))
+    hg = _host_graph_input(spark, sf_dir)
     out = label_propagation(hg, "src_host", "dst_host", rounds=2)
     return out.select(F.col("node").alias("host"), "community")
 
@@ -10206,7 +10181,7 @@ SELECT shard_key, shard_index,
        printf('%s/shard-%05d.jsonl', shard_key, shard_index)
          AS shard_path,
        count(*) AS n_docs,
-       sum(n_bytes) AS n_bytes,
+       CAST(sum(n_bytes) AS BIGINT) AS n_bytes,
        min(doc_id) AS first_id,
        max(doc_id) AS last_id,
        md5(string_agg(h, '' ORDER BY doc_id)) AS content_md5

@@ -37,7 +37,14 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pdf_ocr_spark.pipeline.extract_job import DOC_SCHEMA, extract_docs_arrow
+from pdf_ocr_spark.pipeline.extract_job import (
+    DOC_SCHEMA,
+    _assemble_doc,
+    _parsed_batches,
+    _record_batch,
+    extract_docs_arrow,
+    salted_repartition,
+)
 
 #: schema of the Common-Crawl-style pages table (BASELINE.json input_hint)
 PAGES_SCHEMA = StructType(
@@ -77,13 +84,9 @@ def stream_extract(
         reader = reader.option("ignoreCorruptFiles", "true")
     pages = reader.parquet(input_path)
 
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
-    docs = (
-        pages.select("url", "html")
-        .repartition(num_partitions, F.xxhash64("url"))
-        .mapInArrow(extract_docs_arrow, schema=DOC_SCHEMA)
-    )
+    docs = salted_repartition(
+        pages.select("url", "html"), num_partitions
+    ).mapInArrow(extract_docs_arrow, schema=DOC_SCHEMA)
 
     writer = (
         docs.writeStream.format("parquet")
@@ -263,11 +266,8 @@ def stream_feed_frontier(
         .option("ignoreCorruptFiles", "true")
         .parquet(feeds_path)
     )
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
     items = (
-        feeds.select("url", "body", "fetched_at")
-        .repartition(num_partitions, F.xxhash64("url"))
+        salted_repartition(feeds.select("url", "body", "fetched_at"), num_partitions)
         .mapInPandas(
             _stream_feed_batch,
             # a LOCAL schema: StructType.add mutates the receiver, and
@@ -324,30 +324,14 @@ DOC_TS_SCHEMA = StructType(
 
 
 def extract_docs_with_ts_arrow(batches):
-    """Arrow extractor over (url, warc_ts, html) batches: the fused
+    """Arrow extractor over (url, html, warc_ts) batches: the fused
     extractor's output columns plus the untouched per-row ``warc_ts``.
     No join needed — the kernel's 1:1 input-order contract makes the
     timestamp a pure column pass-through (zero extra shuffle, unlike a
     join-back-by-url inside every micro-batch)."""
-    import pyarrow as pa
-
-    from pdf_ocr_spark.pipeline.extract_job import _parse_batch, _tune_worker_gc
-
-    _tune_worker_gc()
-    engine = None
-    types = (
-        pa.string(), pa.string(), pa.string(), pa.int32(), pa.int32(),
-        pa.int32(), pa.string(), pa.string(), pa.int64(), pa.int32(),
-    )
-    names = [f.name for f in DOC_SCHEMA.fields] + ["warc_ts"]
-    for rb in batches:
-        rows, engine = _parse_batch(
-            rb.column(0).to_pylist(), rb.column(2).to_pylist(), engine
-        )
-        cols = list(zip(*rows)) if rows else [[] for _ in types]
-        arrays = [pa.array(c, t) for c, t in zip(cols, types)]
-        arrays.append(rb.column(1))
-        yield pa.record_batch(arrays, names=names)
+    for rb, docs in _parsed_batches(batches):
+        out = _record_batch([_assemble_doc(*d) for d in docs], DOC_SCHEMA)
+        yield out.append_column("warc_ts", rb.column(2))
 
 
 def stream_wet_export(
@@ -381,13 +365,9 @@ def stream_wet_export(
         "ignoreCorruptFiles", "true"
     )
     pages = reader.parquet(input_path)
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
-    docs = (
-        pages.select("url", "warc_ts", "html")
-        .repartition(num_partitions, F.xxhash64("url"))
-        .mapInArrow(extract_docs_with_ts_arrow, schema=DOC_TS_SCHEMA)
-    )
+    docs = salted_repartition(
+        pages.select("url", "html", "warc_ts"), num_partitions
+    ).mapInArrow(extract_docs_with_ts_arrow, schema=DOC_TS_SCHEMA)
 
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
         wet_in = (
@@ -445,13 +425,9 @@ def stream_quality_gate(
         "ignoreCorruptFiles", "true"
     )
     pages = reader.parquet(input_path)
-    if num_partitions is None:
-        num_partitions = max(spark.sparkContext.defaultParallelism, 8)
-    docs = (
-        pages.select("url", "html")
-        .repartition(num_partitions, F.xxhash64("url"))
-        .mapInArrow(extract_docs_arrow, schema=DOC_SCHEMA)
-    )
+    docs = salted_repartition(
+        pages.select("url", "html"), num_partitions
+    ).mapInArrow(extract_docs_arrow, schema=DOC_SCHEMA)
     model_local = [
         (int(r[0]), int(r[1]), int(r[2]), r[3]) for r in model_rows
     ]

@@ -10,7 +10,6 @@ OCRed whatever codec the PDF carries,
 import random
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pdf_ocr_spark.kernels.pdf.jbig2 import (
@@ -677,14 +676,10 @@ class TestFuzz:
 class TestPipelineIntegration:
     def test_jbig2_scan_branch_end_to_end(self):
         from pdf_ocr_spark.fixtures.genpages import gen_jbig2_scan_rows
-        from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
+        from tools.freeze_goldens import page_frame
 
         rows = gen_jbig2_scan_rows()
-        batch = pd.DataFrame({"url": [r["url"] for r in rows],
-                              "html": [bytes(r["html"]) for r in rows]})
-        pages = pd.concat(list(extract_batch(iter([batch]))),
-                          ignore_index=True)
-        pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+        pages = page_frame(rows)
         assert (pages["status"] == "ok").all()
         assert pages["needs_ocr"].all()
         by_url = pages.set_index(["url", "page"])["page_text"]

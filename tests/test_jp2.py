@@ -9,7 +9,6 @@ OCRed whatever codec the PDF carries,
 import random
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pdf_ocr_spark.kernels.pdf.jp2 import (
@@ -253,14 +252,10 @@ class TestPipelineIntegration:
         decodes real pixels; the stub recognizes the marker; the
         truncated doc falls back to the fingerprint, not a failure."""
         from pdf_ocr_spark.fixtures.genpages import gen_jpx_scan_rows
-        from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
+        from tools.freeze_goldens import page_frame
 
         rows = gen_jpx_scan_rows()
-        batch = pd.DataFrame({"url": [r["url"] for r in rows],
-                              "html": [bytes(r["html"]) for r in rows]})
-        pages = pd.concat(list(extract_batch(iter([batch]))),
-                          ignore_index=True)
-        pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+        pages = page_frame(rows)
         assert (pages["status"] == "ok").all()
         assert pages["needs_ocr"].all()
         by_url = pages.set_index(["url", "page"])["page_text"]

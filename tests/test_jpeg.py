@@ -9,7 +9,6 @@ recognize, plus adversarial inputs (truncation, garbage, progressive)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -474,14 +473,10 @@ def test_pixelcode_rejects_non_marker():
 
 def test_jpeg_scan_pipeline_roundtrip():
     from pdf_ocr_spark.fixtures.genpages import gen_jpeg_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
+    from tools.freeze_goldens import page_frame
 
     rows = gen_jpeg_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows], "html": [bytes(r["html"]) for r in rows]}
-    )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+    pages = page_frame(rows)
     assert bool(pages["needs_ocr"].all())
     assert (pages["status"] == "ok").all()
     # every intact page (baseline, progressive, AND cmyk) recovers its

@@ -167,15 +167,14 @@ def test_ocr_failure_surfaces_as_typed_doc_failure(vlm_server, monkeypatch):
     """Pipeline contract: an OCR-failed page makes the DOCUMENT a typed
     'ocr_failed' failure (resume retries it) — never an ok doc with
     silently-empty text."""
-    import pandas as pd
-
     import pdf_ocr_spark.kernels.ocr_stub as stub
     from pdf_ocr_spark.fixtures.genpages import make_scan_pdf
     from pdf_ocr_spark.kernels.ocr_remote import RemoteVlmEngine
     from pdf_ocr_spark.pipeline.extract_job import (
         OCR_FAILED_REASON,
-        extract_docs_batch,
+        extract_docs_arrow,
     )
+    from tools.freeze_goldens import run_route
 
     monkeypatch.setenv("SPARK_GRAFT_OCR_URL", vlm_server)
     monkeypatch.setattr(stub, "_ENGINE", None)  # force lazy re-init
@@ -189,8 +188,7 @@ def test_ocr_failure_surfaces_as_typed_doc_failure(vlm_server, monkeypatch):
     try:
         _FakeVlm.fail_count = 99
         pdf = make_scan_pdf(["unreachable text"])
-        batch = pd.DataFrame({"url": ["u://scan"], "html": [pdf]})
-        out = pd.concat(list(extract_docs_batch(iter([batch]))))
+        out = run_route(extract_docs_arrow, ["u://scan"], [pdf])
         row = out.iloc[0]
         assert row["status"] == "failed"
         assert row["failure_reason"] == OCR_FAILED_REASON
@@ -201,17 +199,19 @@ def test_ocr_failure_surfaces_as_typed_doc_failure(vlm_server, monkeypatch):
 
 
 def test_ocr_batch_paged_route_marks_failure(vlm_server, monkeypatch):
-    """The page-level route too: an OCR-failed page row becomes
-    status='failed' with the typed reason, not a silently-blank page."""
-    import pandas as pd
-
+    """The page-level route too: in a document with one text page and
+    one scan page, the OCR-failed page row becomes status='failed' with
+    the typed reason (not a silently-blank page) while the text page
+    stays ok — and the same document's doc row is failed."""
     import pdf_ocr_spark.kernels.ocr_stub as stub
+    from pdf_ocr_spark.fixtures.genpages import make_text_scan_pdf
     from pdf_ocr_spark.kernels.ocr_remote import RemoteVlmEngine
     from pdf_ocr_spark.pipeline.extract_job import (
         OCR_FAILED_REASON,
-        PAGE_SCHEMA,
-        ocr_batch,
+        extract_docs_arrow,
+        extract_pages_arrow,
     )
+    from tools.freeze_goldens import run_route
 
     monkeypatch.setenv("SPARK_GRAFT_OCR_URL", vlm_server)
     monkeypatch.setattr(stub, "_ENGINE", None)
@@ -224,19 +224,20 @@ def test_ocr_batch_paged_route_marks_failure(vlm_server, monkeypatch):
     monkeypatch.setattr(RemoteVlmEngine, "__init__", fast_init)
     try:
         _FakeVlm.fail_count = 99
-        cols = [f.name for f in PAGE_SCHEMA.fields]
-        batch = pd.DataFrame(
-            [
-                ("u://a", "pdf", 1, None, 0, True, b"IMG", "ok", None, 10),
-                ("u://a", "pdf", 2, "text page", 3, False, None, "ok", None, 10),
-            ],
-            columns=cols,
-        )
-        out = pd.concat(list(ocr_batch(iter([batch]))))
-        failed = out[out["page"] == 1].iloc[0]
-        assert failed["status"] == "failed"
-        assert failed["failure_reason"] == OCR_FAILED_REASON
-        assert out[out["page"] == 2].iloc[0]["status"] == "ok"
+        pdf = make_text_scan_pdf(["text page line"], "unreachable scan")
+        pages = run_route(extract_pages_arrow, ["u://a"], [pdf]).set_index("page")
+        assert list(pages.index) == [1, 2]
+        text, scan = pages.loc[1], pages.loc[2]
+        assert text["status"] == "ok" and text["failure_reason"] is None
+        assert text["page_text"] == "text page line"
+        assert not text["needs_ocr"]
+        assert scan["status"] == "failed"
+        assert scan["failure_reason"] == OCR_FAILED_REASON
+        assert scan["page_text"] is None
+        assert scan["needs_ocr"]  # the was-OCR marker survives the failure
+        doc = run_route(extract_docs_arrow, ["u://a"], [pdf]).iloc[0]
+        assert doc["status"] == "failed"
+        assert doc["failure_reason"] == OCR_FAILED_REASON
     finally:
         _FakeVlm.fail_count = 0
         monkeypatch.setattr(stub, "_ENGINE", None)
@@ -268,22 +269,20 @@ def test_resume_retries_transient_ocr_failures(spark):
 def test_pipeline_env_swap(vlm_server, monkeypatch):
     """With SPARK_GRAFT_OCR_URL set, the fused extractor UDF body routes
     scan-PDF pages to the remote engine instead of the stub.  Driven by
-    calling ``extract_docs_batch`` exactly as the executor does (env vars
+    calling ``extract_docs_arrow`` exactly as the executor does (env vars
     cannot reach ALREADY-RUNNING reused python workers mid-session — on a
     cluster the variable ships via spark.executorEnv at submit time)."""
-    import pandas as pd
-
     import pdf_ocr_spark.kernels.ocr_stub as stub
     from pdf_ocr_spark.fixtures.genpages import make_scan_pdf
-    from pdf_ocr_spark.pipeline.extract_job import extract_docs_batch
+    from pdf_ocr_spark.pipeline.extract_job import extract_docs_arrow
+    from tools.freeze_goldens import run_route
 
     monkeypatch.setenv("SPARK_GRAFT_OCR_URL", vlm_server)
     monkeypatch.setattr(stub, "_ENGINE", None)  # force lazy re-init
     try:
         _FakeVlm.fail_count = 0
         pdf = make_scan_pdf(["remote ocr target"])
-        batch = pd.DataFrame({"url": ["u://scan"], "html": [pdf]})
-        out = pd.concat(list(extract_docs_batch(iter([batch]))))
+        out = run_route(extract_docs_arrow, ["u://scan"], [pdf])
         row = out.iloc[0]
         assert row["status"] == "ok"
         assert "line one of" in row["extracted_text"]  # remote engine ran

@@ -97,10 +97,13 @@ def test_resume_anti_join(spark, corpus_parquet, tmp_path):
 
 
 def test_fused_equals_paged_route(spark, corpus_parquet, docs_df):
-    """The fused single-stage extractor (hot path) and the page-level
-    route (extract → OCR → groupBy assemble) emit identical documents —
-    the paged route is the semantics oracle for the fusion."""
-    from pdf_ocr_spark.pipeline.extract_job import extract_documents_paged
+    """The fused single-stage extractor (hot path) and the page table
+    re-merged by the SQL ``assemble_documents`` (the giant-document
+    route's re-merge) emit identical documents."""
+    from pdf_ocr_spark.pipeline.extract_job import (
+        assemble_documents,
+        extract_pages,
+    )
 
     pages = spark.read.parquet(corpus_parquet)
     cols = [
@@ -111,9 +114,53 @@ def test_fused_equals_paged_route(spark, corpus_parquet, docs_df):
     fused = {r["url"]: tuple(r[c] for c in cols) for r in docs_df.select(cols).collect()}
     paged = {
         r["url"]: tuple(r[c] for c in cols)
-        for r in extract_documents_paged(pages).select(cols).collect()
+        for r in assemble_documents(extract_pages(pages)).select(cols).collect()
     }
     assert fused == paged
+
+
+def test_core_failure_rows_per_route(monkeypatch):
+    """The document, page and page-range routes share one parse-and-OCR
+    core but type failures per route: a failed PDF is one page=0 row; a
+    kernel crash is content_kind 'unknown' on the document and page
+    routes but 'pdf' on the range route (its rows are PDFs by
+    construction)."""
+    import pyarrow as pa
+
+    import pdf_ocr_spark.kernels.pdf.extract as kx
+    from pdf_ocr_spark.pipeline.extract_job import (
+        extract_docs_arrow,
+        extract_pages_arrow,
+        extract_range_arrow,
+    )
+    from tools.freeze_goldens import run_route
+
+    broken = b"%PDF-1.7\ngarbage with no xref"
+    crash = b"%PDF-1.7\ncrash me"
+    real = kx.extract_pdf
+
+    def extract_pdf(data, *a):
+        if data == crash:
+            raise KeyError("boom")
+        return real(data, *a)
+
+    monkeypatch.setattr(kx, "extract_pdf", extract_pdf)
+    urls, htmls = ["u://broken", "u://crash"], [broken, crash]
+    docs = run_route(extract_docs_arrow, urls, htmls).set_index("url")
+    pages = run_route(extract_pages_arrow, urls, htmls).set_index("url")
+    ranges = pa.Table.from_batches(list(extract_range_arrow(iter([pa.record_batch(
+        [pa.array(urls), pa.array(htmls, pa.binary()),
+         pa.array([1, 1], pa.int32()), pa.array([3, 3], pa.int32())],
+        names=["url", "html", "page_lo", "page_hi"],
+    )])))).to_pandas().set_index("url")
+    for rows in (pages, ranges):
+        assert rows.loc["u://broken", "page"] == 0
+        assert rows.loc["u://broken", "failure_reason"].startswith("pdf_")
+    assert docs.loc["u://crash", "content_kind"] == "unknown"
+    assert pages.loc["u://crash", "content_kind"] == "unknown"
+    assert ranges.loc["u://crash", "content_kind"] == "pdf"
+    for rows in (docs, pages, ranges):
+        assert rows.loc["u://crash", "failure_reason"] == "kernel_crash: KeyError"
 
 
 def test_doc_lineage_metrics(spark, corpus_parquet):
@@ -316,13 +363,14 @@ def test_html_mentioning_pdf_magic_routes_as_html(spark):
 def test_plan_has_single_planned_shuffle(spark, corpus_parquet):
     """The page-level plan shows exactly the one explicit repartition
     (hashpartitioning on xxhash64(url)); extraction + OCR are
-    partition-local (SURVEY.md §4.3)."""
+    partition-local in ONE python stage (SURVEY.md §4.3)."""
     from pdf_ocr_spark.pipeline.extract_job import extract_pages
 
     pages = spark.read.parquet(corpus_parquet)
     plan = extract_pages(pages, num_partitions=8)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "xxhash64" in plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 
 
 def test_column_pruning_reaches_scan(spark, corpus_parquet):

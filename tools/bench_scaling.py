@@ -239,8 +239,8 @@ def ceiling(procs: int, n_docs: int = N_DOCS) -> float:
 
 
 def _ceiling_work(args):
-    """Runs the EXACT executor UDF body (extract_docs_batch: parse +
-    batched OCR + per-doc assembly over pandas batches) outside Spark —
+    """Runs the EXACT executor UDF body (extract_docs_arrow: parse +
+    batched OCR + per-doc assembly over Arrow batches) outside Spark —
     so fraction-of-ceiling isolates only Spark's transport/scheduling.
     Batches are sliced to the session's Arrow batch size."""
     urls, htmls = args

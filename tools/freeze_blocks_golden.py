@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf_ocr_spark.fixtures.genpages import gen_rows  # noqa: E402
 from pdf_ocr_spark.pipeline.extract_job import extract_blocks_batch  # noqa: E402
+from tools.freeze_goldens import require_reference_pdf  # noqa: E402
 
 N_DOCS = 60  # must match q_blocks_table / q_blocks_histogram
 
@@ -48,6 +49,7 @@ def golden_frame() -> pd.DataFrame:
 
 
 if __name__ == "__main__":
+    require_reference_pdf()
     df = golden_frame()
     df.to_parquet(OUT, index=False)
     print(f"wrote {len(df)} block rows -> {OUT}")

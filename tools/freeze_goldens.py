@@ -20,15 +20,53 @@ import os
 import sys
 
 import pandas as pd
+import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdf_ocr_spark.fixtures.genpages import gen_rows  # noqa: E402
+from pdf_ocr_spark.fixtures.genpages import _REF_PDF_PATH, gen_rows  # noqa: E402
 
 FIXTURES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "pdf_ocr_spark", "fixtures",
 )
+
+
+def require_reference_pdf() -> None:
+    """Exit non-zero unless the reference sample PDF is present: without
+    it gen_rows() silently drops its row 0, and every golden built from
+    gen_rows would be rewritten with different values."""
+    if not os.path.exists(_REF_PDF_PATH):
+        sys.exit(
+            f"{_REF_PDF_PATH} is missing: gen_rows() would drop its row 0 "
+            "(the reference sample PDF) and change every gen_rows-based "
+            "golden.  Restore the file, then rerun."
+        )
+
+
+def run_route(arrow_fn, urls, htmls) -> pd.DataFrame:
+    """One of the extractor's ``mapInArrow`` bodies (extract_docs_arrow,
+    extract_pages_arrow) run in-process over one batch of pages rows —
+    integer columns widened to int64, the frozen goldens' column types."""
+    batch = pa.record_batch(
+        [pa.array(urls, pa.string()),
+         pa.array([bytes(h) if h is not None else None for h in htmls], pa.binary())],
+        names=["url", "html"],
+    )
+    out = pa.Table.from_batches(list(arrow_fn(iter([batch]))))
+    return out.cast(pa.schema(
+        [pa.field(f.name, pa.int64()) if pa.types.is_integer(f.type) else f
+         for f in out.schema]
+    )).to_pandas()
+
+
+def page_frame(rows) -> pd.DataFrame:
+    """The page route (parse + OCR, one row per page) over ``rows``."""
+    from pdf_ocr_spark.pipeline.extract_job import extract_pages_arrow
+
+    return run_route(
+        extract_pages_arrow, [r["url"] for r in rows], [r["html"] for r in rows]
+    )
 
 
 def freeze_blocks() -> pd.DataFrame:
@@ -42,14 +80,12 @@ def freeze_blocks() -> pd.DataFrame:
 def freeze_extract_corpus() -> pd.DataFrame:
     """Golden for the flagship query: the fused extractor UDF body run
     in-process over gen_rows(150) (must match q_extract_corpus)."""
-    from pdf_ocr_spark.pipeline.extract_job import extract_docs_batch
+    from pdf_ocr_spark.pipeline.extract_job import extract_docs_arrow
 
     rows = gen_rows(150)
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) if r["html"] is not None else None for r in rows]}
+    out = run_route(
+        extract_docs_arrow, [r["url"] for r in rows], [r["html"] for r in rows]
     )
-    out = pd.concat(list(extract_docs_batch(iter([batch]))), ignore_index=True)
     out["text_md5"] = [
         hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
         for t in out["extracted_text"]
@@ -65,17 +101,8 @@ def freeze_pages_table() -> pd.DataFrame:
     """Golden for the pages-level table (documents → PAGES → blocks):
     the page-route kernel (extract + OCR stage) run in-process over
     gen_rows(100); page text pinned by md5 (must match q_pages_table)."""
-    import hashlib
-
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
-
     rows = gen_rows(100)
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) if r["html"] is not None else None for r in rows]}
-    )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+    pages = page_frame(rows)
     pages["page_md5"] = [
         hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
         for t in pages["page_text"]
@@ -91,15 +118,8 @@ def freeze_pages_table() -> pd.DataFrame:
 def freeze_lineage_totals() -> pd.DataFrame:
     """Corpus-wide lineage totals (partition-independent, unlike the
     per-partition sidecar rows): the page-level kernel run in-process."""
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
-
     rows = gen_rows(150)
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) if r["html"] is not None else None for r in rows]}
-    )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+    pages = page_frame(rows)
     golden = pd.DataFrame(
         [
             {
@@ -122,15 +142,8 @@ def freeze_lineage_parts() -> pd.DataFrame:
     hex chars of md5(url) mod 8 — engine-independent, partitioning-
     independent): the page-level kernel run in-process, grouped with
     pandas (must match q_extract_lineage)."""
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
-
     rows = gen_rows(150)
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) if r["html"] is not None else None for r in rows]}
-    )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+    pages = page_frame(rows)
     pages["part_id"] = [
         int(hashlib.md5(u.encode("utf-8")).hexdigest()[:8], 16) % 8
         for u in pages["url"]
@@ -171,20 +184,16 @@ def freeze_pipeline_e2e() -> pd.DataFrame:
     import re
 
     from pdf_ocr_spark.operators import text_analysis as T
-    from pdf_ocr_spark.pipeline.extract_job import extract_docs_batch
+    from pdf_ocr_spark.pipeline.extract_job import extract_docs_arrow
 
     rows = gen_rows(150)
     urls = [r["url"] for r in rows] + [
         "zz-mirror://" + r["url"] for i, r in enumerate(rows) if i % 3 == 0
     ]
-    htmls = [
-        bytes(r["html"]) if r["html"] is not None else None for r in rows
-    ] + [
-        bytes(r["html"]) if r["html"] is not None else None
-        for i, r in enumerate(rows) if i % 3 == 0
+    htmls = [r["html"] for r in rows] + [
+        r["html"] for i, r in enumerate(rows) if i % 3 == 0
     ]
-    batch = pd.DataFrame({"url": urls, "html": htmls})
-    docs = pd.concat(list(extract_docs_batch(iter([batch]))), ignore_index=True)
+    docs = run_route(extract_docs_arrow, urls, htmls)
     ok = docs[docs["status"] == "ok"].copy()
 
     def cnt(pattern: str, text: str) -> int:
@@ -346,15 +355,8 @@ def freeze_jpeg_scan_ocr() -> pd.DataFrame:
     pixel-grid marker from DECODED baseline-JPEG pixels (must match
     q_jpeg_scan_ocr)."""
     from pdf_ocr_spark.fixtures.genpages import gen_jpeg_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
-
     rows = gen_jpeg_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) for r in rows]}
-    )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+    pages = page_frame(rows)
     pages["ocr_md5"] = [
         hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
         for t in pages["page_text"]
@@ -393,15 +395,8 @@ def freeze_ccitt_scan_ocr() -> pd.DataFrame:
     pixel-grid marker from pixels decoded by the from-scratch T.4/T.6
     codec (must match q_ccitt_scan_ocr)."""
     from pdf_ocr_spark.fixtures.genpages import gen_ccitt_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
-
     rows = gen_ccitt_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) for r in rows]}
-    )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+    pages = page_frame(rows)
     pages["ocr_md5"] = [
         hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
         for t in pages["page_text"]
@@ -443,15 +438,8 @@ def freeze_jpx_scan_ocr() -> pd.DataFrame:
     pixel-grid marker from pixels decoded by the from-scratch EBCOT/5-3
     codec (must match q_jpx_scan_ocr)."""
     from pdf_ocr_spark.fixtures.genpages import gen_jpx_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
-
     rows = gen_jpx_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) for r in rows]}
-    )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+    pages = page_frame(rows)
     pages["ocr_md5"] = [
         hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
         for t in pages["page_text"]
@@ -495,15 +483,8 @@ def freeze_jbig2_scan_ocr() -> pd.DataFrame:
     pixel-grid marker from pixels decoded by the from-scratch
     generic-region codec (must match q_jbig2_scan_ocr)."""
     from pdf_ocr_spark.fixtures.genpages import gen_jbig2_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_batch, ocr_batch
-
     rows = gen_jbig2_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) for r in rows]}
-    )
-    pages = pd.concat(list(extract_batch(iter([batch]))), ignore_index=True)
-    pages = pd.concat(list(ocr_batch(iter([pages]))), ignore_index=True)
+    pages = page_frame(rows)
     pages["ocr_md5"] = [
         hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
         for t in pages["page_text"]
@@ -542,6 +523,7 @@ def freeze_jbig2_rasters() -> pd.DataFrame:
 
 
 if __name__ == "__main__":
+    require_reference_pdf()
     for name, fn in [
         ("blocks", freeze_blocks),
         ("extract_corpus", freeze_extract_corpus),

@@ -30,6 +30,7 @@ from pdf_ocr_spark.sources.warc import (  # noqa: E402
     warc_to_wat_bytes,
     wat_rows,
 )
+from tools.freeze_goldens import require_reference_pdf  # noqa: E402
 
 N_DOCS = 150  # must match q_sink_wat_export
 
@@ -63,6 +64,7 @@ def golden_frame() -> pd.DataFrame:
 
 
 if __name__ == "__main__":
+    require_reference_pdf()
     df = golden_frame()
     df.to_parquet(OUT, index=False)
     print(f"wrote {len(df)} wat rows -> {OUT}")

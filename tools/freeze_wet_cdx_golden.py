@@ -23,12 +23,13 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pdf_ocr_spark.fixtures.genpages import gen_rows  # noqa: E402
-from pdf_ocr_spark.pipeline.extract_job import extract_docs_batch  # noqa: E402
+from pdf_ocr_spark.pipeline.extract_job import extract_docs_arrow  # noqa: E402
 from pdf_ocr_spark.sources.warc import (  # noqa: E402
     CDX_COLUMNS,
     cdx_records,
     write_warc_bytes,
 )
+from tools.freeze_goldens import require_reference_pdf, run_route  # noqa: E402
 
 N_DOCS = 150  # must match q_wet_cdx
 DATE = "2025-01-01T00:00:00Z"  # timestamp_seconds(1735689600) in the query
@@ -42,12 +43,9 @@ OUT = os.path.join(
 
 def golden_frame() -> pd.DataFrame:
     rows = gen_rows(N_DOCS)
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) if r["html"] is not None else None
-                  for r in rows]}
+    docs = run_route(
+        extract_docs_arrow, [r["url"] for r in rows], [r["html"] for r in rows]
     )
-    docs = pd.concat(list(extract_docs_batch(iter([batch]))), ignore_index=True)
     recs = sorted(
         (u, DATE, t.encode("utf-8"))
         for u, t in zip(docs["url"], docs["extracted_text"])
@@ -60,6 +58,7 @@ def golden_frame() -> pd.DataFrame:
 
 
 if __name__ == "__main__":
+    require_reference_pdf()
     df = golden_frame()
     df.to_parquet(OUT, index=False)
     print(f"wrote {len(df)} wet-cdx rows -> {OUT}")
