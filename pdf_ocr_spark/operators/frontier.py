@@ -12,9 +12,8 @@ match on the same regexes."""
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -39,27 +38,17 @@ ROBOTS_RULE_SCHEMA = StructType(
 )
 
 
-def _rules_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _robots_text(body) -> str:
+    """A robots.txt body arrives as text or as bytes (decoded as UTF-8,
+    undecodable bytes replaced)."""
+    return body if isinstance(body, str) else body.decode("utf-8", "replace")
+
+
+def _rule_rows(body):
     from pdf_ocr_spark.kernels.robots import parse_robots
 
-    cols = [f.name for f in ROBOTS_RULE_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for domain, body in zip(batch["domain"], batch["body"]):
-            try:
-                text = (
-                    bytes(body).decode("utf-8", "replace")
-                    if not isinstance(body, str)
-                    else body
-                )
-                for r in parse_robots(text):
-                    rows.append(
-                        (domain, r.agent, r.allow, r.pattern, r.regex,
-                         r.specificity, r.order)
-                    )
-            except Exception:  # noqa: BLE001 — poison robots must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    for r in parse_robots(_robots_text(body)):
+        yield r.agent, r.allow, r.pattern, r.regex, r.specificity, r.order
 
 
 def robots_rules(
@@ -71,7 +60,7 @@ def robots_rules(
     from pdf_ocr_spark.pipeline.extract_job import kernel_route
 
     return kernel_route(
-        robots_df, _rules_batch, ROBOTS_RULE_SCHEMA,
+        robots_df, _rule_rows, ROBOTS_RULE_SCHEMA,
         key="domain", cols=("domain", "body"),
         num_partitions=num_partitions,
     )
@@ -156,24 +145,10 @@ DELAY_SCHEMA = StructType(
 )
 
 
-def _delays_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _delay_rows(body):
     from pdf_ocr_spark.kernels.robots import parse_crawl_delays
 
-    cols = [f.name for f in DELAY_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for domain, body in zip(batch["domain"], batch["body"]):
-            try:
-                text = (
-                    bytes(body).decode("utf-8", "replace")
-                    if not isinstance(body, str)
-                    else body
-                )
-                for agent, delay in parse_crawl_delays(text):
-                    rows.append((domain, agent, delay))
-            except Exception:  # noqa: BLE001 — poison robots must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    return parse_crawl_delays(_robots_text(body))
 
 
 def robots_delays(
@@ -185,7 +160,7 @@ def robots_delays(
     from pdf_ocr_spark.pipeline.extract_job import kernel_route
 
     return kernel_route(
-        robots_df, _delays_batch, DELAY_SCHEMA,
+        robots_df, _delay_rows, DELAY_SCHEMA,
         key="domain", cols=("domain", "body"),
         num_partitions=num_partitions,
     )
@@ -200,24 +175,11 @@ SITEMAP_SCHEMA = StructType(
 )
 
 
-def _sitemaps_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _sitemap_rows(body):
     from pdf_ocr_spark.kernels.robots import parse_sitemaps
 
-    cols = [f.name for f in SITEMAP_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for domain, body in zip(batch["domain"], batch["body"]):
-            try:
-                text = (
-                    bytes(body).decode("utf-8", "replace")
-                    if not isinstance(body, str)
-                    else body
-                )
-                for i, u in enumerate(parse_sitemaps(text)):
-                    rows.append((domain, u, i))
-            except Exception:  # noqa: BLE001 — poison robots must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    for i, u in enumerate(parse_sitemaps(_robots_text(body))):
+        yield u, i
 
 
 def robots_sitemaps(
@@ -228,7 +190,7 @@ def robots_sitemaps(
     from pdf_ocr_spark.pipeline.extract_job import kernel_route
 
     return kernel_route(
-        robots_df, _sitemaps_batch, SITEMAP_SCHEMA,
+        robots_df, _sitemap_rows, SITEMAP_SCHEMA,
         key="domain", cols=("domain", "body"),
         num_partitions=num_partitions,
     )
@@ -244,21 +206,10 @@ SITEMAP_URL_SCHEMA = StructType(
 )
 
 
-def _sitemap_urls_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _sitemap_url_rows(body):
     from pdf_ocr_spark.kernels.robots import parse_sitemap_xml
 
-    cols = [f.name for f in SITEMAP_URL_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for url, body in zip(batch["url"], batch["body"]):
-            try:
-                for loc, lastmod, kind in parse_sitemap_xml(
-                    bytes(body) if body is not None else b""
-                ):
-                    rows.append((url, loc, lastmod, kind))
-            except Exception:  # noqa: BLE001 — poison sitemaps must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    return parse_sitemap_xml(body)
 
 
 def sitemap_urls(
@@ -271,7 +222,7 @@ def sitemap_urls(
     from pdf_ocr_spark.pipeline.extract_job import kernel_route
 
     return kernel_route(
-        sitemaps_df, _sitemap_urls_batch, SITEMAP_URL_SCHEMA,
+        sitemaps_df, _sitemap_url_rows, SITEMAP_URL_SCHEMA,
         key="url", cols=("url", "body"),
         num_partitions=num_partitions,
     )
@@ -326,21 +277,10 @@ FEED_ITEM_SCHEMA = StructType(
 )
 
 
-def _feed_items_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _feed_rows(body):
     from pdf_ocr_spark.kernels.robots import parse_feed
 
-    cols = [f.name for f in FEED_ITEM_SCHEMA.fields]
-    for batch in batches:
-        rows = []
-        for url, body in zip(batch["url"], batch["body"]):
-            try:
-                for link, title, date in parse_feed(
-                    bytes(body) if body is not None else b""
-                ):
-                    rows.append((url, link, title, date))
-            except Exception:  # noqa: BLE001 — poison feeds must not raise
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    return parse_feed(body)
 
 
 def feed_items(
@@ -353,7 +293,7 @@ def feed_items(
     from pdf_ocr_spark.pipeline.extract_job import kernel_route
 
     return kernel_route(
-        feeds_df, _feed_items_batch, FEED_ITEM_SCHEMA,
+        feeds_df, _feed_rows, FEED_ITEM_SCHEMA,
         key="url", cols=("url", "body"),
         num_partitions=num_partitions,
     )

@@ -30,9 +30,9 @@ boilerplate-stripped main text with no page headers — HTML is unpaginated).
 from __future__ import annotations
 
 import os
-from typing import Iterator, Optional
+from functools import partial
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -295,13 +295,14 @@ def _parsed_batches(batches, ranged: bool = False):
 
 def _record_batch(rows: list, schema: StructType):
     """Row tuples → one Arrow record batch typed from the Spark schema —
-    the batch builder of every ``mapInArrow`` body over the core."""
+    the batch builder of every ``mapInArrow`` body.  A float NaN is
+    written as NULL: a NaN crawl delay or confidence is no value."""
     import pyarrow as pa
 
     arrow_schema = to_arrow_schema(schema)
     cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
     return pa.record_batch(
-        [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+        [pa.array(c, f.type, from_pandas=True) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
 
@@ -330,6 +331,76 @@ def extract_range_arrow(batches):
         yield _record_batch(_page_rows(docs), PAGE_SCHEMA)
 
 
+def _is_html(data) -> bool:
+    """Payload filter of the HTML side tables: a non-empty, non-PDF
+    payload."""
+    return bool(data) and not looks_like_pdf(data)
+
+
+def _kernel_rows(row_fn, accept, payloads) -> list:
+    """The per-document loop of every kernel side-table route: ``None``
+    payloads become ``b""``, ``accept`` (a payload filter; ``None`` takes
+    every payload) skips the rest, and ``row_fn(data)`` yields the
+    document's rows without its key.  Poison-row isolation: a document
+    whose kernel raises keeps the rows it yielded before the raise and
+    the batch goes on.  Returns ``(input row index, row)`` pairs."""
+    out = []
+    for i, data in enumerate(payloads):
+        if data is None:
+            data = b""
+        if accept is not None and not accept(data):
+            continue
+        try:
+            for row in row_fn(data):
+                out.append((i, row))
+        except Exception:  # noqa: BLE001 — poison-row isolation
+            continue
+    return out
+
+
+def kernel_arrow(row_fn, schema: StructType, accept, batches):
+    """The ``mapInArrow`` body of a kernel route over (key, payload)
+    batches — bind the first three arguments with ``functools.partial``:
+    one ``schema`` row per yielded ``row_fn`` row, prefixed with its
+    document's key."""
+    _tune_worker_gc()
+    for rb in batches:
+        keys = rb.column(0).to_pylist()
+        pairs = _kernel_rows(row_fn, accept, rb.column(1).to_pylist())
+        yield _record_batch([(keys[i], *row) for i, row in pairs], schema)
+
+
+def salted_repartition(
+    df: DataFrame, num_partitions: Optional[int] = None, keys: tuple = ("url",)
+) -> DataFrame:
+    """The job's single planned shuffle: ``repartition(P, xxhash64(keys))``
+    with the parallelism floor ``P = max(defaultParallelism, 8)`` unless
+    given.  It spreads documents uniformly regardless of input file
+    layout, bounding skew from giant payloads (SURVEY.md §4.1).  Changing
+    the salting or the floor happens HERE, once, for every batch and
+    streaming route."""
+    if num_partitions is None:
+        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    return df.repartition(num_partitions, F.xxhash64(*keys))
+
+
+def kernel_route(
+    pages_df: DataFrame,
+    row_fn,
+    schema: StructType,
+    accept=None,
+    key: str = "url",
+    cols: tuple = ("url", "html"),
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """The shared plan shape of every kernel side-table route: scan
+    pruned to ``cols`` (key, payload) → ONE :func:`salted_repartition`
+    on ``key`` → one ``mapInArrow`` stage running :func:`kernel_arrow`
+    over ``row_fn``."""
+    df = salted_repartition(pages_df.select(*cols), num_partitions, (key,))
+    return df.mapInArrow(partial(kernel_arrow, row_fn, schema, accept), schema=schema)
+
+
 BLOCK_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -343,8 +414,8 @@ BLOCK_SCHEMA = StructType(
 )
 
 
-def extract_blocks_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Block-level extractor (runs on executors): one row per typed layout
+def extract_blocks_arrow(batches):
+    """Block-level extractor (``mapInArrow``): one row per typed layout
     block with bbox + confidence — the reference's blocks JSON sink
     (/root/reference/pdf_ocr_with_boxes_v3.py:220-227,374-377,430-441)
     as a queryable table (SURVEY.md §1.3 documents → pages → blocks).
@@ -352,23 +423,21 @@ def extract_blocks_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     PDF-only by design, like the reference tool: HTML rows carry no layout
     geometry.  Text pages emit the kernel's XY-cut blocks (type
     'title'/'text', confidence 0.95 — v3:226); image-only pages run
-    batched OCR and emit one 'ocr' block per recognized line with the
-    engine confidence and a NULL bbox (the stub engine carries no
-    geometry; a PaddleOCR backend supplies detector quads here).
-    OCR-failed pages emit no rows — the doc-level route carries the typed
-    ``ocr_failed`` failure."""
+    batched OCR — one ``recognize_batch`` per Arrow batch — and emit one
+    'ocr' block per recognized line with the engine confidence and a NULL
+    bbox (the stub engine carries no geometry; a PaddleOCR backend
+    supplies detector quads here).  OCR-failed pages emit no rows — the
+    doc-level route carries the typed ``ocr_failed`` failure."""
     from pdf_ocr_spark.kernels.ocr_stub import OCR_MIN_CONFIDENCE, get_engine
     from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
 
     _tune_worker_gc()
     engine = None
-    cols = [f.name for f in BLOCK_SCHEMA.fields]
-    for pdf_batch in batches:
+    for rb in batches:
         rows = []
         ocr_jobs = []  # (url, page_num, payload)
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not looks_like_pdf(data):
+        for url, data in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
+            if data is None or not looks_like_pdf(data):
                 continue
             try:
                 doc = extract_pdf(data)
@@ -396,36 +465,7 @@ def extract_blocks_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
                     if conf > OCR_MIN_CONFIDENCE and text.strip():
                         rows.append((url, pnum, idx, "ocr", None, text, float(conf)))
                         idx += 1
-        yield pd.DataFrame(rows, columns=cols)
-
-
-def salted_repartition(
-    df: DataFrame, num_partitions: Optional[int] = None, keys: tuple = ("url",)
-) -> DataFrame:
-    """The job's single planned shuffle: ``repartition(P, xxhash64(keys))``
-    with the parallelism floor ``P = max(defaultParallelism, 8)`` unless
-    given.  It spreads documents uniformly regardless of input file
-    layout, bounding skew from giant payloads (SURVEY.md §4.1).  Changing
-    the salting or the floor happens HERE, once, for every batch and
-    streaming route."""
-    if num_partitions is None:
-        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    return df.repartition(num_partitions, F.xxhash64(*keys))
-
-
-def kernel_route(
-    pages_df: DataFrame,
-    batch_fn,
-    schema: StructType,
-    key: str = "url",
-    cols: tuple = ("url", "html"),
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """The shared plan shape of every kernel extraction route: scan
-    pruned to ``cols`` → ONE :func:`salted_repartition` on ``key`` → one
-    python stage running ``batch_fn``."""
-    df = salted_repartition(pages_df.select(*cols), num_partitions, (key,))
-    return df.mapInPandas(batch_fn, schema=schema)
+        yield _record_batch(rows, BLOCK_SCHEMA)
 
 
 def extract_blocks(
@@ -436,10 +476,8 @@ def extract_blocks(
     Same plan shape as the document route — scan pruned to (url, html),
     one salted repartition, one python stage — so the blocks table scales
     exactly like the hot path."""
-    return kernel_route(
-        pages_df, extract_blocks_batch, BLOCK_SCHEMA,
-        num_partitions=num_partitions,
-    )
+    df = salted_repartition(pages_df.select("url", "html"), num_partitions)
+    return df.mapInArrow(extract_blocks_arrow, schema=BLOCK_SCHEMA)
 
 
 COMPOSITE_SCHEMA = StructType(
@@ -453,7 +491,7 @@ COMPOSITE_SCHEMA = StructType(
 )
 
 
-def extract_composites_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _composite_rows(data):
     """Composite-block renderer (v4 semantics): per table/figure on a
     page, the reference's exact composite string —
     'table caption: …\\ntable body: …\\ntable footnote: …' /
@@ -463,24 +501,12 @@ def extract_composites_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Dat
     from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
     from pdf_ocr_spark.kernels.pdf.layout import composite_text
 
-    _tune_worker_gc()
-    cols = [f.name for f in COMPOSITE_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not looks_like_pdf(data):
-                continue
-            try:
-                doc = extract_pdf(data)
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-            if doc.status != "ok":
-                continue
-            for page, idx, text in composite_text(doc.blocks):
-                kind = "image" if text.startswith("image caption:") else "table"
-                rows.append((url, page, idx, kind, text))
-        yield pd.DataFrame(rows, columns=cols)
+    doc = extract_pdf(data)
+    if doc.status != "ok":
+        return
+    for page, idx, text in composite_text(doc.blocks):
+        kind = "image" if text.startswith("image caption:") else "table"
+        yield page, idx, kind, text
 
 
 def extract_composites(
@@ -490,7 +516,7 @@ def extract_composites(
     table/figure with its rendered caption/body/footnote string.  Same
     plan shape as the other extraction routes."""
     return kernel_route(
-        pages_df, extract_composites_batch, COMPOSITE_SCHEMA,
+        pages_df, _composite_rows, COMPOSITE_SCHEMA, looks_like_pdf,
         num_partitions=num_partitions,
     )
 
@@ -507,10 +533,10 @@ RASTER_SCHEMA = StructType(
 )
 
 
-def extract_rasters_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Page rasterizer route (runs on executors): renders every PDF page
-    to the deterministic coverage bitmap (kernels/pdf/raster.py — the
-    from-scratch twin of the reference's pdf_to_images,
+def _raster_rows(data):
+    """Page rasterizer: renders every PDF page to the deterministic
+    coverage bitmap (kernels/pdf/raster.py — the from-scratch twin of the
+    reference's pdf_to_images,
     /root/reference/pdf_ocr_with_boxes_v3.py:144-158) and emits its
     dimensions, ink-pixel count, and full-bitmap digest.  One row per
     page; non-PDF and failed docs emit nothing (they carry no geometry)."""
@@ -521,31 +547,16 @@ def extract_rasters_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     from pdf_ocr_spark.kernels.pdf.extract import MAX_PAGES
     from pdf_ocr_spark.kernels.pdf.raster import parse_pgm, rasterize_page
 
-    _tune_worker_gc()
-    cols = [f.name for f in RASTER_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not looks_like_pdf(data):
-                continue
-            try:
-                doc = PDFDocument(data)
-                for i, pd_ in enumerate(doc.pages()[:MAX_PAGES], 1):
-                    res = interpret_page(doc, pd_)
-                    pgm = rasterize_page(
-                        res.glyphs, res.rules, res.image_draws,
-                        res.width, res.height,
-                        image_payloads=res.images,  # JPEG draws → real luma
-                    )
-                    w, h, px = parse_pgm(pgm)
-                    rows.append(
-                        (url, i, w, h, len(px) - px.count(255),
-                         hashlib.md5(pgm).hexdigest())
-                    )
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    doc = PDFDocument(data)
+    for i, page in enumerate(doc.pages()[:MAX_PAGES], 1):
+        res = interpret_page(doc, page)
+        pgm = rasterize_page(
+            res.glyphs, res.rules, res.image_draws,
+            res.width, res.height,
+            image_payloads=res.images,  # JPEG draws → real luma
+        )
+        w, h, px = parse_pgm(pgm)
+        yield i, w, h, len(px) - px.count(255), hashlib.md5(pgm).hexdigest()
 
 
 ORIENTATION_SCHEMA = StructType(
@@ -559,12 +570,10 @@ ORIENTATION_SCHEMA = StructType(
 )
 
 
-def detect_orientation_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """K4 orientation detection route (runs on executors): per PDF page,
-    the content-based OSD verdict (dominant glyph flow direction — the
-    digital-text analogue of the reference's Tesseract image_to_osd,
+def _orientation_rows(data):
+    """K4 orientation detection: per PDF page, the content-based OSD
+    verdict (dominant glyph flow direction — the digital-text analogue
+    of the reference's Tesseract image_to_osd,
     /root/reference/parse_student_answers.py:40-59) plus the vote
     split.  extract_pdf applies the same verdict internally to
     re-orient rotated pages before layout; this route makes the
@@ -573,25 +582,10 @@ def detect_orientation_batch(
     from pdf_ocr_spark.kernels.pdf.cos import PDFDocument
     from pdf_ocr_spark.kernels.pdf.extract import MAX_PAGES
 
-    _tune_worker_gc()
-    cols = [f.name for f in ORIENTATION_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not looks_like_pdf(data):
-                continue
-            try:
-                doc = PDFDocument(data)
-                for i, pd_ in enumerate(doc.pages()[:MAX_PAGES], 1):
-                    res = interpret_page(doc, pd_)
-                    v = res.rot_votes
-                    rows.append(
-                        (url, i, dominant_rotation(v), v[0], v[1] + v[2] + v[3])
-                    )
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    doc = PDFDocument(data)
+    for i, page in enumerate(doc.pages()[:MAX_PAGES], 1):
+        v = interpret_page(doc, page).rot_votes
+        yield i, dominant_rotation(v), v[0], v[1] + v[2] + v[3]
 
 
 def detect_orientation(
@@ -600,7 +594,7 @@ def detect_orientation(
     """pages(url, html, …) → per-page orientation verdicts (K4).  Same
     plan shape as the other kernel routes."""
     return kernel_route(
-        pages_df, detect_orientation_batch, ORIENTATION_SCHEMA,
+        pages_df, _orientation_rows, ORIENTATION_SCHEMA, looks_like_pdf,
         num_partitions=num_partitions,
     )
 
@@ -613,7 +607,7 @@ def extract_rasters(
     shape as the other extraction routes — scan pruned to (url, html),
     one salted repartition, one python stage."""
     return kernel_route(
-        pages_df, extract_rasters_batch, RASTER_SCHEMA,
+        pages_df, _raster_rows, RASTER_SCHEMA, looks_like_pdf,
         num_partitions=num_partitions,
     )
 
@@ -630,35 +624,15 @@ HTML_TABLE_SCHEMA = StructType(
 )
 
 
-def extract_html_tables_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Structured <table> extractor (runs on executors): one row per
-    HTML table with caption, shape, and row-major cells as TSV — the
-    HTML twin of the PDF composite table blocks.  Non-HTML and
-    poison rows emit nothing."""
+def _html_table_rows(data):
+    """Structured <table> extractor: one row per HTML table with
+    caption, shape, and row-major cells as TSV — the HTML twin of the
+    PDF composite table blocks."""
     from pdf_ocr_spark.kernels.html_extract import extract_tables
 
-    _tune_worker_gc()
-    cols = [f.name for f in HTML_TABLE_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            for t in extract_tables(data):
-                rows.append(
-                    (
-                        url,
-                        t.table_index,
-                        t.caption,
-                        t.n_rows,
-                        t.n_cols,
-                        "\n".join("\t".join(r) for r in t.rows),
-                    )
-                )
-        yield pd.DataFrame(rows, columns=cols)
+    for t in extract_tables(data):
+        yield (t.table_index, t.caption, t.n_rows, t.n_cols,
+               "\n".join("\t".join(r) for r in t.rows))
 
 
 def extract_html_tables(
@@ -669,7 +643,7 @@ def extract_html_tables(
     routes: scan pruned to (url, html), one salted repartition, one
     python stage."""
     return kernel_route(
-        pages_df, extract_html_tables_batch, HTML_TABLE_SCHEMA,
+        pages_df, _html_table_rows, HTML_TABLE_SCHEMA, _is_html,
         num_partitions=num_partitions,
     )
 
@@ -689,28 +663,16 @@ HTML_META_SCHEMA = StructType(
 )
 
 
-def extract_html_meta_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Head-metadata extractor (runs on executors): one row per HTML
-    page with title / description / canonical / lang / OpenGraph /
-    publish date (trafilatura-style scan).  Non-HTML rows, poison rows,
-    and payloads yielding NO metadata at all (e.g. a JPEG or zip that
-    isn't HTML to begin with) emit nothing."""
+def _html_meta_rows(data):
+    """Head metadata: one row per HTML page with title / description /
+    canonical / lang / OpenGraph / publish date (trafilatura-style
+    scan).  Payloads yielding NO metadata at all (e.g. a JPEG or zip
+    that isn't HTML to begin with) emit nothing."""
     from pdf_ocr_spark.kernels.html_extract import extract_metadata
 
-    _tune_worker_gc()
-    cols = [f.name for f in HTML_META_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            m = extract_metadata(data)
-            if any(v is not None for v in m):
-                rows.append((url, *m))
-        yield pd.DataFrame(rows, columns=cols)
+    m = extract_metadata(data)
+    if any(v is not None for v in m):
+        yield m
 
 
 def extract_html_meta(
@@ -721,7 +683,7 @@ def extract_html_meta(
     as the other extraction routes: scan pruned to (url, html), one
     salted repartition, one python stage."""
     return kernel_route(
-        pages_df, extract_html_meta_batch, HTML_META_SCHEMA,
+        pages_df, _html_meta_rows, HTML_META_SCHEMA, _is_html,
         num_partitions=num_partitions,
     )
 
@@ -740,27 +702,13 @@ JSONLD_SCHEMA = StructType(
 )
 
 
-def extract_jsonld_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Structured-data extractor (runs on executors): one row per
-    schema.org JSON-LD entity node — @type, name/headline,
-    datePublished, plus a valid flag so malformed embeds stay visible
-    to coverage accounting.  Non-HTML and JSON-LD-free pages emit
-    nothing."""
+def _jsonld_rows(data):
+    """Structured data: one row per schema.org JSON-LD entity node —
+    @type, name/headline, datePublished, plus a valid flag so malformed
+    embeds stay visible to coverage accounting."""
     from pdf_ocr_spark.kernels.html_extract import extract_jsonld
 
-    _tune_worker_gc()
-    cols = [f.name for f in JSONLD_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            for b in extract_jsonld(data):
-                rows.append((url, *b))
-        yield pd.DataFrame(rows, columns=cols)
+    return extract_jsonld(data)
 
 
 def extract_structured_data(
@@ -770,7 +718,7 @@ def extract_structured_data(
     node_index, ld_type, name, date_published, valid, raw_md5).  Same
     single-shuffle plan shape as the other extraction routes."""
     return kernel_route(
-        pages_df, extract_jsonld_batch, JSONLD_SCHEMA,
+        pages_df, _jsonld_rows, JSONLD_SCHEMA, _is_html,
         num_partitions=num_partitions,
     )
 
@@ -785,27 +733,14 @@ HREFLANG_SCHEMA = StructType(
 )
 
 
-def extract_hreflang_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """hreflang extractor (runs on executors): one row per
-    ``<link rel=alternate hreflang>`` annotation in document order —
-    the cross-language page mapping a multilingual crawl clusters
-    translations by.  Non-HTML and annotation-free pages emit
-    nothing."""
+def _hreflang_rows(data):
+    """hreflang: one row per ``<link rel=alternate hreflang>``
+    annotation in document order — the cross-language page mapping a
+    multilingual crawl clusters translations by."""
     from pdf_ocr_spark.kernels.html_extract import extract_hreflang
 
-    _tune_worker_gc()
-    cols = [f.name for f in HREFLANG_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            for i, (hreflang, href) in enumerate(extract_hreflang(data)):
-                rows.append((url, i, hreflang, href))
-        yield pd.DataFrame(rows, columns=cols)
+    for i, (hreflang, href) in enumerate(extract_hreflang(data)):
+        yield i, hreflang, href
 
 
 def extract_hreflang_links(
@@ -815,7 +750,7 @@ def extract_hreflang_links(
     href).  Same single-shuffle plan shape as the other extraction
     routes."""
     return kernel_route(
-        pages_df, extract_hreflang_batch, HREFLANG_SCHEMA,
+        pages_df, _hreflang_rows, HREFLANG_SCHEMA, _is_html,
         num_partitions=num_partitions,
     )
 
@@ -832,26 +767,13 @@ MICRODATA_SCHEMA = StructType(
 )
 
 
-def extract_microdata_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Microdata extractor (runs on executors): one row per itemprop
-    in the page's schema.org microdata trees — the attribute-based
-    structured-data channel next to JSON-LD.  Non-HTML and
-    microdata-free pages emit nothing."""
+def _microdata_rows(data):
+    """Microdata: one row per itemprop in the page's schema.org
+    microdata trees — the attribute-based structured-data channel next
+    to JSON-LD."""
     from pdf_ocr_spark.kernels.html_extract import extract_microdata
 
-    _tune_worker_gc()
-    cols = [f.name for f in MICRODATA_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or looks_like_pdf(data):
-                continue
-            for p in extract_microdata(data):
-                rows.append((url, *p))
-        yield pd.DataFrame(rows, columns=cols)
+    return extract_microdata(data)
 
 
 def extract_microdata_rows(
@@ -861,7 +783,7 @@ def extract_microdata_rows(
     item_type, prop, value, source) — same single-shuffle route shape
     as :func:`extract_structured_data`."""
     return kernel_route(
-        pages_df, extract_microdata_batch, MICRODATA_SCHEMA,
+        pages_df, _microdata_rows, MICRODATA_SCHEMA, _is_html,
         num_partitions=num_partitions,
     )
 
@@ -877,26 +799,13 @@ FORM_SCHEMA = StructType(
 )
 
 
-def extract_forms_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """AcroForm field extractor (runs on executors): one row per
-    terminal form field — data that never reaches the text layer when
-    fields lack appearance streams.  Non-PDF and poison rows emit
-    nothing."""
+def _form_rows(data):
+    """AcroForm fields: one row per terminal form field — data that
+    never reaches the text layer when fields lack appearance streams."""
     from pdf_ocr_spark.kernels.pdf.forms import extract_form_fields
 
-    _tune_worker_gc()
-    cols = [f.name for f in FORM_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or not looks_like_pdf(data):
-                continue
-            for i, fld in enumerate(extract_form_fields(data)):
-                rows.append((url, i, fld.name, fld.field_type, fld.value))
-        yield pd.DataFrame(rows, columns=cols)
+    for i, fld in enumerate(extract_form_fields(data)):
+        yield i, fld.name, fld.field_type, fld.value
 
 
 def extract_forms(
@@ -905,7 +814,7 @@ def extract_forms(
     """pages(url, html, …) → AcroForm fields (url, field_index, name,
     field_type, value).  Same plan shape as every extraction route."""
     return kernel_route(
-        pages_df, extract_forms_batch, FORM_SCHEMA,
+        pages_df, _form_rows, FORM_SCHEMA, looks_like_pdf,
         num_partitions=num_partitions,
     )
 
@@ -934,51 +843,29 @@ OUTLINE_SCHEMA = StructType(
 )
 
 
-def extract_doc_info_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _doc_info_rows(data):
     """Trailer /Info metadata per PDF (title/author/dates + page count)
     — quality/dedup signals the content stream doesn't carry."""
     from pdf_ocr_spark.kernels.pdf.docinfo import extract_doc_info
 
-    _tune_worker_gc()
-    cols = [f.name for f in DOC_INFO_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or not looks_like_pdf(data):
-                continue
-            rows.append((url, *extract_doc_info(data)))
-        yield pd.DataFrame(rows, columns=cols)
+    yield extract_doc_info(data)
 
 
-def extract_outline_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _outline_rows(data):
     """Outline (bookmark) items per PDF — the document's own table of
     contents, the section-boundary signal for structure-aware chunking
     of long documents.  Outline-less PDFs emit nothing."""
     from pdf_ocr_spark.kernels.pdf.docinfo import extract_outline
 
-    _tune_worker_gc()
-    cols = [f.name for f in OUTLINE_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or not looks_like_pdf(data):
-                continue
-            for it in extract_outline(data):
-                rows.append((url, it.order, it.level, it.title, it.page_num))
-        yield pd.DataFrame(rows, columns=cols)
+    for it in extract_outline(data):
+        yield it.order, it.level, it.title, it.page_num
 
 
 def extract_doc_info(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     return kernel_route(
-        pages_df, extract_doc_info_batch, DOC_INFO_SCHEMA,
+        pages_df, _doc_info_rows, DOC_INFO_SCHEMA, looks_like_pdf,
         num_partitions=num_partitions,
     )
 
@@ -987,7 +874,7 @@ def extract_outline(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     return kernel_route(
-        pages_df, extract_outline_batch, OUTLINE_SCHEMA,
+        pages_df, _outline_rows, OUTLINE_SCHEMA, looks_like_pdf,
         num_partitions=num_partitions,
     )
 
@@ -1004,35 +891,22 @@ ANNOT_SCHEMA = StructType(
 )
 
 
-def extract_annots_batch(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _annot_rows(data):
     """Comment-layer annotations per PDF (sticky notes, highlights with
     text, free-text remarks) — reviewer content the text layer never
     carries.  Link/Widget annots belong to the frontier/forms
     extractors; geometry-only markup is skipped."""
     from pdf_ocr_spark.kernels.pdf.docinfo import extract_annotations
 
-    _tune_worker_gc()
-    cols = [f.name for f in ANNOT_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            if not data or not looks_like_pdf(data):
-                continue
-            for a in extract_annotations(data):
-                rows.append(
-                    (url, a.page_num, a.order, a.subtype, a.contents, a.author)
-                )
-        yield pd.DataFrame(rows, columns=cols)
+    for a in extract_annotations(data):
+        yield a.page_num, a.order, a.subtype, a.contents, a.author
 
 
 def extract_annotations_route(
     pages_df: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     return kernel_route(
-        pages_df, extract_annots_batch, ANNOT_SCHEMA,
+        pages_df, _annot_rows, ANNOT_SCHEMA, looks_like_pdf,
         num_partitions=num_partitions,
     )
 
@@ -1049,31 +923,21 @@ LINK_SCHEMA = StructType(
 )
 
 
-def extract_links_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _link_rows(data):
     """Crawl-frontier extractor: one row per outgoing hyperlink — HTML
     anchor hrefs (with the rel=nofollow/ugc/sponsored opt-out flag) plus
     PDF /Annots Link URIs, document order preserved."""
     from pdf_ocr_spark.kernels.html_extract import extract_links_attrs
     from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
 
-    _tune_worker_gc()
-    cols = [f.name for f in LINK_SCHEMA.fields]
-    for pdf_batch in batches:
-        rows = []
-        for url, payload in zip(pdf_batch["url"], pdf_batch["html"]):
-            data = bytes(payload) if payload is not None else b""
-            try:
-                if looks_like_pdf(data):
-                    doc = extract_pdf(data)
-                    if doc.status == "ok":
-                        for i, u in enumerate(doc.links):
-                            rows.append((url, u, i, "pdf", False, ""))
-                else:
-                    for i, (u, nf, at) in enumerate(extract_links_attrs(data)):
-                        rows.append((url, u, i, "html", nf, at))
-            except Exception:  # noqa: BLE001 — poison-row isolation
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+    if looks_like_pdf(data):
+        doc = extract_pdf(data)
+        if doc.status == "ok":
+            for i, u in enumerate(doc.links):
+                yield u, i, "pdf", False, ""
+    else:
+        for i, (u, nf, at) in enumerate(extract_links_attrs(data)):
+            yield u, i, "html", nf, at
 
 
 def extract_links(
@@ -1082,8 +946,7 @@ def extract_links(
     """pages(url, html, …) → outgoing-link edges (url, link, index,
     source_kind) — same plan shape as the other extraction routes."""
     return kernel_route(
-        pages_df, extract_links_batch, LINK_SCHEMA,
-        num_partitions=num_partitions,
+        pages_df, _link_rows, LINK_SCHEMA, num_partitions=num_partitions
     )
 
 
@@ -1181,22 +1044,20 @@ RANGE_SCHEMA = StructType(
 )
 
 
-def count_pages_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def count_pages_arrow(batches):
     """Cheap structural pass over giant PDFs: page count only (xref +
-    page-tree walk, no content decode)."""
+    page-tree walk, no content decode).  No poison-row isolation here:
+    a dropped count row would drop its giant document from BOTH branches
+    of :func:`extract_documents_split`."""
     from pdf_ocr_spark.kernels.pdf.extract import count_pdf_pages
 
     _tune_worker_gc()
-    for pdf_batch in batches:
-        yield pd.DataFrame(
-            {
-                "url": pdf_batch["url"],
-                "n_pages": [
-                    count_pdf_pages(bytes(p) if p is not None else b"")
-                    for p in pdf_batch["html"]
-                ],
-            }
-        )
+    for rb in batches:
+        rows = [
+            (url, count_pdf_pages(data if data is not None else b""))
+            for url, data in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist())
+        ]
+        yield _record_batch(rows, RANGE_SCHEMA)
 
 
 def extract_documents_split(
@@ -1231,7 +1092,7 @@ def extract_documents_split(
     # consumer.  Registered for release by the NEXT call (or an explicit
     # release_split_cache()) so repeated runs hold at most one cache.
     release_split_cache()
-    counts = giants.mapInPandas(count_pages_batch, schema=RANGE_SCHEMA).persist()
+    counts = giants.mapInArrow(count_pages_arrow, schema=RANGE_SCHEMA).persist()
     _live_split_caches.append(counts)
     ranges = (
         giants.join(counts, "url")

@@ -6669,7 +6669,7 @@ def q_text_compression(spark, sf_dir):
     from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.operators.text_analysis import compression_signals
 
-    rows = gen_html_meta_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_html_meta_rows(48)  # must match tools/freeze_goldens.py html_meta
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -6812,7 +6812,7 @@ def _blocks_corpus_df(spark):
     from pdf_ocr_spark.fixtures.genpages import gen_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_blocks
 
-    rows = gen_rows(60)  # must match tools/freeze_blocks_golden.py N_DOCS
+    rows = gen_rows(60)  # must match tools/freeze_goldens.py blocks
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -6824,7 +6824,7 @@ def q_blocks_table(spark, sf_dir):
     """Block-level table (SURVEY §1.3 documents → pages → blocks): one row
     per typed layout block with bbox + confidence, computed by the
     distributed pipeline; the oracle reads the frozen kernel golden
-    (tools/freeze_blocks_golden.py) — value-hash equality proves the
+    (tools/freeze_goldens.py blocks) — value-hash equality proves the
     Spark route reproduces the kernel byte-for-byte.  Mirrors the
     reference blocks JSON sink
     (/root/reference/pdf_ocr_with_boxes_v3.py:220-227,374-377)."""
@@ -6877,11 +6877,11 @@ def q_blocks_composite(spark, sf_dir):
     Table typing comes from ruled-grid detection, image blocks from
     draw-time CTM bboxes, captions/footnotes from geometric adjacency
     (kernels/pdf/layout.py attach_captions/composite_text).  Oracle =
-    frozen kernel golden (tools/freeze_composites_golden.py)."""
+    frozen kernel golden (tools/freeze_goldens.py composites)."""
     from pdf_ocr_spark.fixtures.genpages import gen_composite_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_composites
 
-    rows = gen_composite_rows(45)  # must match the freeze tool's N_DOCS
+    rows = gen_composite_rows(45)  # must match tools/freeze_goldens.py composites
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7200,11 +7200,11 @@ def q_html_tables(spark, sf_dir):
     shape, and row-major cells as TSV, computed by the distributed
     pipeline (extract_html_tables; same single-shuffle plan shape as the
     hot path).  Tableless pages emit nothing.  Oracle = frozen kernel
-    golden (tools/freeze_html_tables_golden.py)."""
+    golden (tools/freeze_goldens.py html_tables)."""
     from pdf_ocr_spark.fixtures.genpages import gen_html_table_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_tables
 
-    rows = gen_html_table_rows(40)  # must match the freeze tool's N_DOCS
+    rows = gen_html_table_rows(40)  # must match tools/freeze_goldens.py html_tables
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7229,11 +7229,11 @@ def q_html_meta(spark, sf_dir):
     single-shuffle plan shape as the hot path).  Exercises quoted /
     unquoted attributes, entity decoding, a UTF-16LE page, and
     metadata-free shells.  Oracle = frozen kernel golden
-    (tools/freeze_html_meta_golden.py)."""
+    (tools/freeze_goldens.py html_meta)."""
     from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_html_meta_rows(48)  # must match tools/freeze_goldens.py html_meta
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7317,11 +7317,11 @@ def q_html_jsonld(spark, sf_dir):
     top-level arrays, @graph wrappers, attribute parameters, uppercase
     tags, non-ld scripts (ignored), and JSON-LD-free pages (nothing).
     Same single-shuffle route shape as the hot path.  Oracle = frozen
-    kernel golden (tools/freeze_jsonld_golden.py)."""
+    kernel golden (tools/freeze_goldens.py jsonld)."""
     from pdf_ocr_spark.fixtures.genpages import gen_jsonld_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_structured_data
 
-    rows = gen_jsonld_rows(56)  # must match the freeze tool's N_DOCS
+    rows = gen_jsonld_rows(56)  # must match tools/freeze_goldens.py jsonld
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7348,11 +7348,11 @@ def q_html_microdata(spark, sf_dir):
     valued itemscope, uppercase attributes, orphan itemprops (skipped),
     a decoy inside a quoted attribute value, truncated pages, and
     microdata-free pages.  Oracle = frozen kernel golden
-    (tools/freeze_microdata_golden.py)."""
+    (tools/freeze_goldens.py microdata)."""
     from pdf_ocr_spark.fixtures.genpages import gen_microdata_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_microdata_rows
 
-    rows = gen_microdata_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_microdata_rows(48)  # must match tools/freeze_goldens.py microdata
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7379,7 +7379,7 @@ def q_noindex_gate(spark, sf_dir):
     from pdf_ocr_spark.fixtures.genpages import gen_html_meta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_html_meta_rows(48)  # must match tools/freeze_goldens.py html_meta
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7417,11 +7417,11 @@ def q_pdf_forms(spark, sf_dir):
     UTF-16BE/PDFDoc text-string decoding).  Form data never reaches the
     text layer when fields lack appearance streams; skipping it loses
     real content at crawl scale.  Formless PDFs and HTML emit nothing.
-    Oracle = frozen kernel golden (tools/freeze_forms_golden.py)."""
+    Oracle = frozen kernel golden (tools/freeze_goldens.py pdf_forms)."""
     from pdf_ocr_spark.fixtures.genpages import gen_form_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_forms
 
-    rows = gen_form_rows(36)  # must match the freeze tool's N_DOCS
+    rows = gen_form_rows(36)  # must match tools/freeze_goldens.py pdf_forms
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7444,11 +7444,11 @@ def q_pdf_doc_info(spark, sf_dir):
     dates + page count) through the distributed pipeline — the
     quality/dedup signals the content stream doesn't carry; info-less
     PDFs emit all-null fields, non-PDFs emit nothing.  Oracle = frozen
-    kernel golden (tools/freeze_docmeta_golden.py)."""
+    kernel golden (tools/freeze_goldens.py pdf_doc_info)."""
     from pdf_ocr_spark.fixtures.genpages import gen_docmeta_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_doc_info
 
-    rows = gen_docmeta_rows(36)  # must match the freeze tool's N_DOCS
+    rows = gen_docmeta_rows(36)  # must match tools/freeze_goldens.py pdf_doc_info
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7536,11 +7536,11 @@ def q_pdf_annotations(spark, sf_dir):
     order, decoded /Contents (UTF-16BE supported) and author.  Link and
     Widget annots route to the frontier/forms extractors; geometry-only
     markup emits nothing.  Oracle = frozen kernel golden
-    (tools/freeze_annots_golden.py)."""
+    (tools/freeze_goldens.py pdf_annotations)."""
     from pdf_ocr_spark.fixtures.genpages import gen_annot_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_annotations_route
 
-    rows = gen_annot_rows(36)  # must match the freeze tool's N_DOCS
+    rows = gen_annot_rows(36)  # must match tools/freeze_goldens.py pdf_annotations
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -7565,7 +7565,7 @@ def q_canonical_collapse(spark, sf_dir):
     from pdf_ocr_spark.operators.dedup import canonical_url_collapse
     from pdf_ocr_spark.pipeline.extract_job import extract_html_meta
 
-    rows = gen_html_meta_rows(48)  # must match the freeze tool's N_DOCS
+    rows = gen_html_meta_rows(48)  # must match tools/freeze_goldens.py html_meta
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows]
         + [(r["url"] + "?m=1", bytearray(r["html"])) for r in rows],
@@ -7736,11 +7736,11 @@ def q_robots_rules(spark, sf_dir):
     """robots.txt rule tables through the distributed route (RFC 9309
     parse: agent groups, Allow/Disallow, wildcard/end-anchor patterns,
     empty-Disallow allow-all sentinel) — oracle = frozen kernel golden
-    (tools/freeze_robots_golden.py)."""
+    (tools/freeze_goldens.py robots_rules)."""
     from pdf_ocr_spark.fixtures.genpages import gen_robots_rows
     from pdf_ocr_spark.operators.frontier import robots_rules
 
-    robots, _ = gen_robots_rows(25)  # must match the freeze tool
+    robots, _ = gen_robots_rows(25)  # must match tools/freeze_goldens.py robots_rules
     df = spark.createDataFrame(
         [(r["domain"], bytearray(r["body"])) for r in robots],
         schema="domain string, body binary",
@@ -7805,7 +7805,7 @@ def q_sitemap_urls(spark, sf_dir):
     from pdf_ocr_spark.fixtures.genpages import gen_sitemap_rows
     from pdf_ocr_spark.operators.frontier import sitemap_urls
 
-    rows = gen_sitemap_rows(20)  # must match the freeze tool
+    rows = gen_sitemap_rows(20)  # must match tools/freeze_goldens.py sitemap_urls
     df = spark.createDataFrame(
         [(r["url"], bytearray(r["body"])) for r in rows],
         schema="url string, body binary",
@@ -8563,11 +8563,11 @@ def q_feed_items(spark, sf_dir):
     alternate links beat rel=self decoys; gzipped feeds decompress
     in-kernel; broken docs emit nothing.  Feeds are the freshest
     frontier-discovery channel next to sitemaps and page links.
-    Oracle = frozen kernel golden (tools/freeze_feeds_golden.py)."""
+    Oracle = frozen kernel golden (tools/freeze_goldens.py feed_items)."""
     from pdf_ocr_spark.fixtures.genpages import gen_feed_rows
     from pdf_ocr_spark.operators.frontier import feed_items
 
-    rows = gen_feed_rows(24)  # must match the freeze tool's N_DOCS
+    rows = gen_feed_rows(24)  # must match tools/freeze_goldens.py feed_items
     df = spark.createDataFrame(
         [(r["url"], bytearray(r["body"])) for r in rows],
         schema="url string, body binary",
@@ -9353,11 +9353,11 @@ def q_hreflang_alternates(spark, sf_dir):
     cliques, broken reciprocity, one-way hubs, uppercase/unquoted/
     entity-encoded markup, an alternate-feed decoy (no hreflang — must
     not emit), and annotation-free pages.  Oracle = frozen kernel
-    golden (tools/freeze_hreflang_golden.py)."""
+    golden (tools/freeze_goldens.py hreflang)."""
     from pdf_ocr_spark.fixtures.genpages import gen_hreflang_rows
     from pdf_ocr_spark.pipeline.extract_job import extract_hreflang_links
 
-    rows = gen_hreflang_rows(18)  # must match the freeze tool's N_CLUSTERS
+    rows = gen_hreflang_rows(18)  # must match tools/freeze_goldens.py hreflang
     pages = spark.createDataFrame(
         [(r["url"], bytearray(r["html"])) for r in rows],
         schema="url string, html binary",
@@ -9885,10 +9885,11 @@ def q_tpch_q5ish(spark, sf_dir):
     """TPC-H Q5 shape — local-supplier volume: the 6-table join chain
     (region → nation → customer → orders → lineitem → supplier) with
     the Q5 twist that the SUPPLIER must sit in the CUSTOMER's nation
-    (two independent paths to nation meeting in one equality).  The
-    dimension chain (region/nation/customer is small) broadcasts; only
-    the orders⋈lineitem fact join shuffles — the join-ordering shape
-    Catalyst must get right at 100 TB.  Exact decimal revenue sums."""
+    (two independent paths to nation meeting in one equality).  Only
+    region and nation are hinted to broadcast: customer and supplier
+    grow with the scale factor, so AQE picks their join strategy from
+    runtime sizes — the join-ordering shape Catalyst must get right at
+    100 TB.  Exact decimal revenue sums."""
     region = _t(spark, sf_dir, "region")
     nation = _t(spark, sf_dir, "nation")
     cust = _t(spark, sf_dir, "customer")
@@ -9906,9 +9907,9 @@ def q_tpch_q5ish(spark, sf_dir):
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(dims), orders.o_custkey == dims.c_custkey)
+        .join(dims, orders.o_custkey == dims.c_custkey)
         .join(
-            F.broadcast(sup),
+            sup,
             (li.l_suppkey == sup.s_suppkey)
             & (sup.s_nationkey == dims.c_nationkey),
         )
@@ -9940,7 +9941,8 @@ def q_tpch_q14ish(spark, sf_dir):
     """TPC-H Q14 shape — promotion revenue share: conditional
     aggregation over the lineitem⋈part join (CASE inside the sum, the
     filter-inside-aggregate idiom), one month of shipments.  Part
-    broadcasts; the ratio divides two exact decimal sums once."""
+    grows with the scale factor, so AQE picks the join strategy; the
+    ratio divides two exact decimal sums once."""
     part = _t(spark, sf_dir, "part")
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
@@ -9950,7 +9952,7 @@ def q_tpch_q14ish(spark, sf_dir):
     promo = F.when(
         F.col("p_type").startswith("PROMO"), rev
     ).otherwise(F.lit(0.0))
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    j = li.join(part, li.l_partkey == part.p_partkey)
     agg = j.agg(
         _dec_sum(promo, 2).alias("promo_revenue"),
         _dec_sum(rev, 2).alias("total_revenue"),

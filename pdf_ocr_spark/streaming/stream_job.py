@@ -37,9 +37,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from pdf_ocr_spark.operators.frontier import FEED_ITEM_SCHEMA, _feed_rows
 from pdf_ocr_spark.pipeline.extract_job import (
     DOC_SCHEMA,
     _assemble_doc,
+    _kernel_rows,
     _parsed_batches,
     _record_batch,
     extract_docs_arrow,
@@ -224,6 +226,13 @@ def running_totals_stateful(pages: DataFrame) -> DataFrame:
     )
 
 
+#: FEED_ITEM_SCHEMA plus the feed's fetch timestamp — a new field list:
+#: StructType.add would mutate the shared batch-route schema
+FEED_TS_SCHEMA = StructType(
+    list(FEED_ITEM_SCHEMA.fields) + [StructField("fetched_at", TimestampType())]
+)
+
+
 def stream_feed_frontier(
     spark: SparkSession,
     feeds_path: str,
@@ -244,16 +253,6 @@ def stream_feed_frontier(
     State stays bounded: the watermark ages out link-dedup state after
     a day — re-discoveries beyond that are acceptable (the fetch loop's
     snapshot-table anti-join is the durable guard)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from pdf_ocr_spark.operators.frontier import _feed_items_batch, FEED_ITEM_SCHEMA
-
     schema = StructType(
         [
             StructField("url", StringType()),
@@ -268,15 +267,7 @@ def stream_feed_frontier(
     )
     items = (
         salted_repartition(feeds.select("url", "body", "fetched_at"), num_partitions)
-        .mapInPandas(
-            _stream_feed_batch,
-            # a LOCAL schema: StructType.add mutates the receiver, and
-            # FEED_ITEM_SCHEMA is the shared batch-route schema
-            schema=StructType(
-                list(FEED_ITEM_SCHEMA.fields)
-                + [StructField("fetched_at", TimestampType())]
-            ),
-        )
+        .mapInArrow(_stream_feed_batch, schema=FEED_TS_SCHEMA)
         .withWatermark("fetched_at", "1 day")
         .dropDuplicatesWithinWatermark(["link"])
     )
@@ -292,25 +283,14 @@ def stream_feed_frontier(
 
 
 def _stream_feed_batch(batches):
-    """Feed-parse kernel for the streaming route: same parser as the
-    batch ``_feed_items_batch``, carrying the fetch timestamp through
-    for the watermark."""
-    import pandas as pd
-
-    from pdf_ocr_spark.kernels.robots import parse_feed
-
-    for batch in batches:
-        rows = []
-        for url, body, ts in zip(batch["url"], batch["body"], batch["fetched_at"]):
-            try:
-                for link, title, date in parse_feed(
-                    bytes(body) if body is not None else b""
-                ):
-                    rows.append((url, link, title, date, ts))
-            except Exception:  # noqa: BLE001
-                continue
-        yield pd.DataFrame(
-            rows, columns=["feed", "link", "title", "date", "fetched_at"]
+    """Feed-parse body (``mapInArrow``) of the streaming route: the batch
+    route's feed row function over the shared per-document loop, carrying
+    each feed's fetch timestamp through for the watermark."""
+    for rb in batches:
+        urls, ts = rb.column(0).to_pylist(), rb.column(2).to_pylist()
+        pairs = _kernel_rows(_feed_rows, None, rb.column(1).to_pylist())
+        yield _record_batch(
+            [(urls[i], *row, ts[i]) for i, row in pairs], FEED_TS_SCHEMA
         )
 
 

@@ -196,18 +196,43 @@ def test_fused_plan_single_shuffle_no_aggregate(spark, corpus_parquet):
     assert "HashAggregate" not in plan and "SortAggregate" not in plan
 
 
-def test_composites_plan_single_shuffle(spark, corpus_parquet):
-    """The composite-blocks route keeps the hot-path plan shape: scan
-    pruned to (url, html) → one salted Exchange → one python stage."""
-    from pdf_ocr_spark.pipeline.extract_job import extract_composites
-
-    pages = spark.read.parquet(corpus_parquet).filter(F.length("url") >= 0)
-    plan = (
-        extract_composites(pages, num_partitions=8)
-        ._jdf.queryExecution().executedPlan().toString()
+# every kernel side-table route: (module, route, input columns)
+_KERNEL_ROUTES = [
+    ("pdf_ocr_spark.pipeline.extract_job", name, ("url", "html")) for name in (
+        "extract_blocks", "extract_composites", "extract_rasters",
+        "detect_orientation", "extract_html_tables", "extract_html_meta",
+        "extract_structured_data", "extract_hreflang_links",
+        "extract_microdata_rows", "extract_forms", "extract_doc_info",
+        "extract_outline", "extract_annotations_route", "extract_links",
     )
+] + [
+    ("pdf_ocr_spark.operators.frontier", name, cols) for name, cols in (
+        ("robots_rules", ("domain", "body")),
+        ("robots_delays", ("domain", "body")),
+        ("robots_sitemaps", ("domain", "body")),
+        ("sitemap_urls", ("url", "body")),
+        ("feed_items", ("url", "body")),
+    )
+]
+
+
+@pytest.mark.parametrize(
+    "module,route,cols", _KERNEL_ROUTES, ids=[r for _, r, _ in _KERNEL_ROUTES]
+)
+def test_kernel_route_plan_single_shuffle(spark, corpus_parquet, module, route, cols):
+    """Every kernel side-table route keeps the hot-path plan shape: scan
+    pruned to (key, payload) → one salted Exchange → one Arrow python
+    stage."""
+    import importlib
+
+    fn = getattr(importlib.import_module(module), route)
+    pages = spark.read.parquet(corpus_parquet).filter(F.length("url") >= 0)
+    df = pages.select(F.col("url").alias(cols[0]), F.col("html").alias(cols[1]))
+    plan = fn(df, num_partitions=8)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "xxhash64" in plan
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
     assert "HashAggregate" not in plan and "SortAggregate" not in plan
 
 

@@ -12,7 +12,7 @@ Each parallelism level runs in its OWN subprocess (fresh JVM), pinned
 with taskset to exactly that many cores (JVM service threads included —
 an honest N-core-cluster stand-in). Two untimed warmup runs reach steady
 state, then best-of-3 of the timed job:
-    read parquet → repartition(N, xxhash64(url)) → fused mapInPandas
+    read parquet → repartition(N, xxhash64(url)) → fused mapInArrow
     (parse + batched OCR + per-doc assembly) → noop sink
 """
 

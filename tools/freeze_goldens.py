@@ -3,14 +3,16 @@ semantics are not SQL-expressible: the DuckDB oracle then reads the
 frozen parquet, giving those queries a FULL value-hash correctness gate
 instead of a rows-only check.
 
-Every golden is computed WITHOUT Spark (the kernels / batch UDF bodies
-run in-process) over the repo's own deterministic corpus
-(fixtures/genpages.gen_rows) — so the gate compares the DISTRIBUTED
-pipeline against an independent local execution, and never depends on
-the driver's testdata seeds.
+Every golden is computed WITHOUT Spark (the kernels / ``mapInArrow``
+bodies run in-process) over the repo's own deterministic corpora
+(fixtures/genpages) — so the gate compares the DISTRIBUTED pipeline
+against an independent local execution, and never depends on the
+driver's testdata seeds.  Golden ``<name>`` is written to
+``pdf_ocr_spark/fixtures/<name>_golden.parquet``; the registry query
+reads it as ``_golden("<name>")``.
 
 Rerun (and commit the results) only when kernel semantics intentionally
-change:  python tools/freeze_goldens.py
+change:  python tools/freeze_goldens.py [name ...]   (no name: all)
 """
 
 from __future__ import annotations
@@ -18,13 +20,18 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+from functools import partial
+from typing import Callable, NamedTuple, Optional
 
 import pandas as pd
 import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pdf_ocr_spark.fixtures import genpages as G  # noqa: E402
 from pdf_ocr_spark.fixtures.genpages import _REF_PDF_PATH, gen_rows  # noqa: E402
+from pdf_ocr_spark.operators import frontier as FR  # noqa: E402
+from pdf_ocr_spark.pipeline import extract_job as EJ  # noqa: E402
 
 FIXTURES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -45,9 +52,9 @@ def require_reference_pdf() -> None:
 
 
 def run_route(arrow_fn, urls, htmls) -> pd.DataFrame:
-    """One of the extractor's ``mapInArrow`` bodies (extract_docs_arrow,
-    extract_pages_arrow) run in-process over one batch of pages rows —
-    integer columns widened to int64, the frozen goldens' column types."""
+    """One of the extractor's ``mapInArrow`` bodies run in-process over
+    one batch of (key, payload) rows — integer columns widened to int64,
+    the frozen goldens' column types."""
     batch = pa.record_batch(
         [pa.array(urls, pa.string()),
          pa.array([bytes(h) if h is not None else None for h in htmls], pa.binary())],
@@ -62,65 +69,198 @@ def run_route(arrow_fn, urls, htmls) -> pd.DataFrame:
 
 def page_frame(rows) -> pd.DataFrame:
     """The page route (parse + OCR, one row per page) over ``rows``."""
-    from pdf_ocr_spark.pipeline.extract_job import extract_pages_arrow
-
     return run_route(
-        extract_pages_arrow, [r["url"] for r in rows], [r["html"] for r in rows]
+        EJ.extract_pages_arrow, [r["url"] for r in rows], [r["html"] for r in rows]
     )
 
 
-def freeze_blocks() -> pd.DataFrame:
-    from tools.freeze_blocks_golden import OUT, golden_frame
+def _md5(texts) -> list:
+    return [
+        hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
+        for t in texts
+    ]
 
-    df = golden_frame()
-    df.to_parquet(OUT, index=False)
-    return df
+
+class RouteGolden(NamedTuple):
+    """A kernel-route golden: the route's ``mapInArrow`` body run by
+    :func:`run_route` over ``corpus()`` → (keys, payloads), passed
+    through ``post`` if given, then stably sorted by ``sort_keys``."""
+
+    corpus: Callable[[], tuple]
+    route: Callable
+    sort_keys: list
+    post: Optional[Callable[[pd.DataFrame], pd.DataFrame]] = None
 
 
-def freeze_extract_corpus() -> pd.DataFrame:
+def _pairs(gen, *args, key: str = "url", payload: str = "html") -> Callable:
+    """Corpus of a golden: ``gen(*args)`` rows as (keys, payloads)."""
+
+    def corpus():
+        rows = gen(*args)
+        return [r[key] for r in rows], [r[payload] for r in rows]
+
+    return corpus
+
+
+def _robots(n: int) -> Callable:
+    return _pairs(lambda: G.gen_robots_rows(n)[0], key="domain", payload="body")
+
+
+def _kernel(row_fn, schema, accept=None):
+    """The Arrow body of ``kernel_route(df, row_fn, schema, accept)``."""
+    return partial(EJ.kernel_arrow, row_fn, schema, accept)
+
+
+def _flat_bbox(df: pd.DataFrame) -> pd.DataFrame:
+    """bbox exploded into scalar columns (array-typed value hashing
+    differs between engines; four doubles compare exactly)."""
+    for i, c in enumerate(["x0", "y0", "x1", "y1"]):
+        df[c] = df["bbox"].map(lambda b, i=i: None if b is None else b[i])
+    return df.drop(columns=["bbox"]).rename(columns={"type": "block_type"})
+
+
+_PDF = EJ.looks_like_pdf
+_PAGE_KEYS = ["url", "page_num"]
+_RASTERS = _kernel(EJ._raster_rows, EJ.RASTER_SCHEMA, _PDF)
+
+ROUTE_GOLDENS = {
+    "blocks": RouteGolden(
+        _pairs(gen_rows, 60), EJ.extract_blocks_arrow,
+        ["url", "page_num", "block_index"], _flat_bbox,
+    ),
+    "composites": RouteGolden(
+        _pairs(G.gen_composite_rows, 45),
+        _kernel(EJ._composite_rows, EJ.COMPOSITE_SCHEMA, _PDF),
+        ["url", "page_num", "block_index"],
+    ),
+    "rasters": RouteGolden(_pairs(G.gen_raster_rows), _RASTERS, _PAGE_KEYS),
+    "jpeg_rasters": RouteGolden(_pairs(G.gen_jpeg_scan_rows), _RASTERS, _PAGE_KEYS),
+    "ccitt_rasters": RouteGolden(_pairs(G.gen_ccitt_scan_rows), _RASTERS, _PAGE_KEYS),
+    "jpx_rasters": RouteGolden(_pairs(G.gen_jpx_scan_rows), _RASTERS, _PAGE_KEYS),
+    "jbig2_rasters": RouteGolden(_pairs(G.gen_jbig2_scan_rows), _RASTERS, _PAGE_KEYS),
+    "orientation": RouteGolden(
+        _pairs(G.gen_orientation_rows),
+        _kernel(EJ._orientation_rows, EJ.ORIENTATION_SCHEMA, _PDF),
+        _PAGE_KEYS,
+    ),
+    "html_tables": RouteGolden(
+        _pairs(G.gen_html_table_rows, 40),
+        _kernel(EJ._html_table_rows, EJ.HTML_TABLE_SCHEMA, EJ._is_html),
+        ["url", "table_index"],
+    ),
+    "html_meta": RouteGolden(
+        _pairs(G.gen_html_meta_rows, 48),
+        _kernel(EJ._html_meta_rows, EJ.HTML_META_SCHEMA, EJ._is_html),
+        ["url"],
+    ),
+    "jsonld": RouteGolden(
+        _pairs(G.gen_jsonld_rows, 56),
+        _kernel(EJ._jsonld_rows, EJ.JSONLD_SCHEMA, EJ._is_html),
+        ["url", "block_index", "node_index"],
+    ),
+    "hreflang": RouteGolden(
+        _pairs(G.gen_hreflang_rows, 18),
+        _kernel(EJ._hreflang_rows, EJ.HREFLANG_SCHEMA, EJ._is_html),
+        ["url", "ord"],
+    ),
+    "microdata": RouteGolden(
+        _pairs(G.gen_microdata_rows, 48),
+        _kernel(EJ._microdata_rows, EJ.MICRODATA_SCHEMA, EJ._is_html),
+        ["url", "item_index", "prop"],
+    ),
+    "pdf_forms": RouteGolden(
+        _pairs(G.gen_form_rows, 36),
+        _kernel(EJ._form_rows, EJ.FORM_SCHEMA, _PDF),
+        ["url", "field_index"],
+    ),
+    "pdf_doc_info": RouteGolden(
+        _pairs(G.gen_docmeta_rows, 36),
+        _kernel(EJ._doc_info_rows, EJ.DOC_INFO_SCHEMA, _PDF),
+        ["url"],
+    ),
+    "pdf_outline": RouteGolden(
+        _pairs(G.gen_docmeta_rows, 36),
+        _kernel(EJ._outline_rows, EJ.OUTLINE_SCHEMA, _PDF),
+        ["url", "order"],
+    ),
+    "pdf_annotations": RouteGolden(
+        _pairs(G.gen_annot_rows, 36),
+        _kernel(EJ._annot_rows, EJ.ANNOT_SCHEMA, _PDF),
+        ["url", "order"],
+    ),
+    "link_edges": RouteGolden(
+        _pairs(G.gen_link_rows), _kernel(EJ._link_rows, EJ.LINK_SCHEMA),
+        ["url", "link_index"],
+    ),
+    "robots_rules": RouteGolden(
+        _robots(25), _kernel(FR._rule_rows, FR.ROBOTS_RULE_SCHEMA),
+        ["domain", "rule_order", "agent"],
+    ),
+    "robots_delays": RouteGolden(
+        _robots(25), _kernel(FR._delay_rows, FR.DELAY_SCHEMA),
+        ["domain", "agent"],
+    ),
+    "robots_sitemaps": RouteGolden(
+        _robots(25), _kernel(FR._sitemap_rows, FR.SITEMAP_SCHEMA),
+        ["domain", "sm_index"],
+    ),
+    "sitemap_urls": RouteGolden(
+        _pairs(G.gen_sitemap_rows, 20, payload="body"),
+        _kernel(FR._sitemap_url_rows, FR.SITEMAP_URL_SCHEMA),
+        ["sitemap", "loc"],
+    ),
+    "feed_items": RouteGolden(
+        _pairs(G.gen_feed_rows, 24, payload="body"),
+        _kernel(FR._feed_rows, FR.FEED_ITEM_SCHEMA),
+        ["feed", "link"],
+    ),
+}
+
+
+def route_frame(golden: RouteGolden) -> pd.DataFrame:
+    df = run_route(golden.route, *golden.corpus())
+    if golden.post is not None:
+        df = golden.post(df)
+    return df.sort_values(golden.sort_keys, kind="mergesort").reset_index(drop=True)
+
+
+def robots_urls_frame() -> pd.DataFrame:
+    """The frontier URL list — the INPUT fixture the ``robots_frontier``
+    oracle SQL reads to recompute the longest-match verdicts
+    independently from the frozen rules."""
+    return pd.DataFrame({"url": G.gen_robots_rows(25)[1]})
+
+
+def extract_corpus_frame() -> pd.DataFrame:
     """Golden for the flagship query: the fused extractor UDF body run
     in-process over gen_rows(150) (must match q_extract_corpus)."""
-    from pdf_ocr_spark.pipeline.extract_job import extract_docs_arrow
-
     rows = gen_rows(150)
     out = run_route(
-        extract_docs_arrow, [r["url"] for r in rows], [r["html"] for r in rows]
+        EJ.extract_docs_arrow, [r["url"] for r in rows], [r["html"] for r in rows]
     )
-    out["text_md5"] = [
-        hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
-        for t in out["extracted_text"]
-    ]
-    golden = out[
+    out["text_md5"] = _md5(out["extracted_text"])
+    return out[
         ["url", "content_kind", "status", "n_pages", "n_blocks", "n_chars", "text_md5"]
     ].sort_values("url", kind="mergesort").reset_index(drop=True)
-    golden.to_parquet(os.path.join(FIXTURES, "extract_corpus_golden.parquet"), index=False)
-    return golden
 
 
-def freeze_pages_table() -> pd.DataFrame:
+def pages_table_frame() -> pd.DataFrame:
     """Golden for the pages-level table (documents → PAGES → blocks):
     the page-route kernel (extract + OCR stage) run in-process over
     gen_rows(100); page text pinned by md5 (must match q_pages_table)."""
-    rows = gen_rows(100)
-    pages = page_frame(rows)
-    pages["page_md5"] = [
-        hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
-        for t in pages["page_text"]
-    ]
-    golden = pages[
+    pages = page_frame(gen_rows(100))
+    pages["page_md5"] = _md5(pages["page_text"])
+    return pages[
         ["url", "content_kind", "page", "page_md5", "n_blocks", "needs_ocr",
          "status", "failure_reason", "n_bytes"]
     ].sort_values(["url", "page"], kind="mergesort").reset_index(drop=True)
-    golden.to_parquet(os.path.join(FIXTURES, "pages_table_golden.parquet"), index=False)
-    return golden
 
 
-def freeze_lineage_totals() -> pd.DataFrame:
+def lineage_totals_frame() -> pd.DataFrame:
     """Corpus-wide lineage totals (partition-independent, unlike the
     per-partition sidecar rows): the page-level kernel run in-process."""
-    rows = gen_rows(150)
-    pages = page_frame(rows)
-    golden = pd.DataFrame(
+    pages = page_frame(gen_rows(150))
+    return pd.DataFrame(
         [
             {
                 "n_docs": int(pages["url"].nunique()),
@@ -131,24 +271,19 @@ def freeze_lineage_totals() -> pd.DataFrame:
             }
         ]
     )
-    golden.to_parquet(
-        os.path.join(FIXTURES, "lineage_totals_golden.parquet"), index=False
-    )
-    return golden
 
 
-def freeze_lineage_parts() -> pd.DataFrame:
+def lineage_parts_frame() -> pd.DataFrame:
     """Per-bucket lineage rows with the DETERMINISTIC part key (first 8
     hex chars of md5(url) mod 8 — engine-independent, partitioning-
     independent): the page-level kernel run in-process, grouped with
     pandas (must match q_extract_lineage)."""
-    rows = gen_rows(150)
-    pages = page_frame(rows)
+    pages = page_frame(gen_rows(150))
     pages["part_id"] = [
         int(hashlib.md5(u.encode("utf-8")).hexdigest()[:8], 16) % 8
         for u in pages["url"]
     ]
-    golden = (
+    return (
         pages.groupby("part_id")
         .apply(
             lambda g: pd.Series(
@@ -168,23 +303,17 @@ def freeze_lineage_parts() -> pd.DataFrame:
         .sort_values("part_id", kind="mergesort")
         .reset_index(drop=True)
     )
-    golden.to_parquet(
-        os.path.join(FIXTURES, "lineage_parts_golden.parquet"), index=False
-    )
-    return golden
 
 
-def freeze_pipeline_e2e() -> pd.DataFrame:
+def pipeline_e2e_frame() -> pd.DataFrame:
     """Golden for the end-to-end composition (extract → Gopher gate →
     exact dedup → per-kind accounting), computed with a THIRD engine:
     the extraction UDF body in-process + python `re` twins of the
     engine-identical quality patterns (\\z spelled \\Z for python) +
     hashlib dedup — independent of both Spark and DuckDB."""
-    import hashlib
     import re
 
     from pdf_ocr_spark.operators import text_analysis as T
-    from pdf_ocr_spark.pipeline.extract_job import extract_docs_arrow
 
     rows = gen_rows(150)
     urls = [r["url"] for r in rows] + [
@@ -193,7 +322,7 @@ def freeze_pipeline_e2e() -> pd.DataFrame:
     htmls = [r["html"] for r in rows] + [
         r["html"] for i, r in enumerate(rows) if i % 3 == 0
     ]
-    docs = run_route(extract_docs_arrow, urls, htmls)
+    docs = run_route(EJ.extract_docs_arrow, urls, htmls)
     ok = docs[docs["status"] == "ok"].copy()
 
     def cnt(pattern: str, text: str) -> int:
@@ -225,7 +354,7 @@ def freeze_pipeline_e2e() -> pd.DataFrame:
     ok["fp"] = [fp(t) for t in ok["extracted_text"]]
     canon = set(ok.groupby("fp")["url"].min())
     ok["canonical"] = ok["url"].isin(canon)
-    golden = (
+    return (
         ok.assign(
             n_quality=ok["passes"].astype(int),
             n_clean=(ok["passes"] & ok["canonical"]).astype(int),
@@ -239,27 +368,6 @@ def freeze_pipeline_e2e() -> pd.DataFrame:
         .sort_values("content_kind")
         .reset_index(drop=True)
     )
-    golden.to_parquet(os.path.join(FIXTURES, "pipeline_e2e_golden.parquet"), index=False)
-    return golden
-
-
-def freeze_link_edges() -> pd.DataFrame:
-    """Golden for the link-graph route (HTML hrefs + PDF Link URIs) —
-    the link extractor run in-process over gen_rows(100)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_link_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_links_batch
-
-    rows = gen_link_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) if r["html"] is not None else None for r in rows]}
-    )
-    out = pd.concat(list(extract_links_batch(iter([batch]))), ignore_index=True)
-    golden = out.sort_values(["url", "link_index"], kind="mergesort").reset_index(
-        drop=True
-    )
-    golden.to_parquet(os.path.join(FIXTURES, "link_edges_golden.parquet"), index=False)
-    return golden
 
 
 def media_rows(n: int = 50):
@@ -271,7 +379,7 @@ def media_rows(n: int = 50):
     ]
 
 
-def freeze_multimodal_frames() -> pd.DataFrame:
+def multimodal_frames_frame() -> pd.DataFrame:
     from pdf_ocr_spark.operators.multimodal import decode_frames_batch
 
     rows = media_rows(50)
@@ -280,14 +388,10 @@ def freeze_multimodal_frames() -> pd.DataFrame:
     )
     out = pd.concat(list(decode_frames_batch(iter([batch]))), ignore_index=True)
     out["feature_sum"] = [round(sum(f), 6) for f in out["feature"]]
-    golden = out[["media_id", "frame_idx", "feature_sum"]]
-    golden.to_parquet(
-        os.path.join(FIXTURES, "multimodal_frames_golden.parquet"), index=False
-    )
-    return golden
+    return out[["media_id", "frame_idx", "feature_sum"]]
 
 
-def freeze_sink_overlay() -> pd.DataFrame:
+def sink_overlay_frame() -> pd.DataFrame:
     """Golden for the S7 SVG sink: the overlay kernel run directly over
     the same synthetic single-box pages q_sink_overlay_svg builds."""
     from pdf_ocr_spark.operators.sinks import overlay_svg
@@ -302,248 +406,60 @@ def freeze_sink_overlay() -> pd.DataFrame:
             (f"doc://{i}", i % 3 + 1,
              hashlib.md5(svg.encode("utf-8")).hexdigest(), len(svg))
         )
-    golden = pd.DataFrame(recs, columns=["url", "page", "svg_md5", "svg_len"])
-    golden.to_parquet(
-        os.path.join(FIXTURES, "sink_overlay_golden.parquet"), index=False
-    )
-    return golden
+    return pd.DataFrame(recs, columns=["url", "page", "svg_md5", "svg_len"])
 
 
-def freeze_rasters() -> pd.DataFrame:
-    """Golden for the S10 rasterizer route: the raster UDF body run
-    in-process over gen_raster_rows() — the standard mix plus
-    vector-only line-art docs (must match q_raster_pages)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_raster_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_rasters_batch
-
-    rows = gen_raster_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) if r["html"] is not None else None for r in rows]}
-    )
-    out = pd.concat(list(extract_rasters_batch(iter([batch]))), ignore_index=True)
-    golden = out.sort_values(
-        ["url", "page_num"], kind="mergesort"
-    ).reset_index(drop=True)
-    golden.to_parquet(os.path.join(FIXTURES, "rasters_golden.parquet"), index=False)
-    return golden
-
-
-def freeze_orientation() -> pd.DataFrame:
-    """Golden for the K4 orientation route: the OSD UDF body run
-    in-process over gen_orientation_rows() (must match
-    q_page_orientation)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_orientation_rows
-    from pdf_ocr_spark.pipeline.extract_job import detect_orientation_batch
-
-    rows = gen_orientation_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) if r["html"] is not None else None for r in rows]}
-    )
-    out = pd.concat(list(detect_orientation_batch(iter([batch]))), ignore_index=True)
-    golden = out.sort_values(
-        ["url", "page_num"], kind="mergesort"
-    ).reset_index(drop=True)
-    golden.to_parquet(os.path.join(FIXTURES, "orientation_golden.parquet"), index=False)
-    return golden
-
-
-def freeze_jpeg_scan_ocr() -> pd.DataFrame:
-    """Golden for the real-pixel scan branch: extract+OCR UDF bodies run
-    in-process over gen_jpeg_scan_rows() — the stub recognizes the
-    pixel-grid marker from DECODED baseline-JPEG pixels (must match
-    q_jpeg_scan_ocr)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jpeg_scan_rows
-    rows = gen_jpeg_scan_rows()
-    pages = page_frame(rows)
-    pages["ocr_md5"] = [
-        hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
-        for t in pages["page_text"]
-    ]
-    golden = pages[
+def scan_ocr_frame(gen) -> pd.DataFrame:
+    """Golden for a codec's scan branch: the page route over ``gen()`` —
+    the stub recognizes the pixel-grid marker from pixels the
+    from-scratch codec decoded (JPEG, CCITT T.4/T.6, JPEG 2000 or
+    JBIG2), so the OCR text md5 pins the decoder."""
+    pages = page_frame(gen())
+    pages["ocr_md5"] = _md5(pages["page_text"])
+    return pages[
         ["url", "page", "ocr_md5", "needs_ocr", "status"]
     ].sort_values(["url", "page"], kind="mergesort").reset_index(drop=True)
-    golden.to_parquet(os.path.join(FIXTURES, "jpeg_scan_ocr_golden.parquet"), index=False)
-    return golden
 
 
-def freeze_jpeg_rasters() -> pd.DataFrame:
-    """Golden for the rasterizer's real-luma image fills: the raster UDF
-    body over the JPEG scan corpus — full-bitmap md5 pins the codec's
-    DCT/Huffman/IDCT output pixel-for-pixel (must match
-    q_jpeg_scan_raster)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jpeg_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_rasters_batch
+# the goldens that are not a kernel route's rows: name → frame function
+FRAMES = {
+    "extract_corpus": extract_corpus_frame,
+    "pages_table": pages_table_frame,
+    "lineage_totals": lineage_totals_frame,
+    "lineage_parts": lineage_parts_frame,
+    "pipeline_e2e": pipeline_e2e_frame,
+    "multimodal_frames": multimodal_frames_frame,
+    "sink_overlay": sink_overlay_frame,
+    "robots_urls": robots_urls_frame,
+    "jpeg_scan_ocr": partial(scan_ocr_frame, G.gen_jpeg_scan_rows),
+    "ccitt_scan_ocr": partial(scan_ocr_frame, G.gen_ccitt_scan_rows),
+    "jpx_scan_ocr": partial(scan_ocr_frame, G.gen_jpx_scan_rows),
+    "jbig2_scan_ocr": partial(scan_ocr_frame, G.gen_jbig2_scan_rows),
+}
 
-    rows = gen_jpeg_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) for r in rows]}
-    )
-    out = pd.concat(list(extract_rasters_batch(iter([batch]))), ignore_index=True)
-    golden = out.sort_values(
-        ["url", "page_num"], kind="mergesort"
-    ).reset_index(drop=True)
-    golden.to_parquet(os.path.join(FIXTURES, "jpeg_rasters_golden.parquet"), index=False)
-    return golden
-
-
-def freeze_ccitt_scan_ocr() -> pd.DataFrame:
-    """Golden for the G4 fax scan branch: extract+OCR UDF bodies run
-    in-process over gen_ccitt_scan_rows() — the stub recognizes the
-    pixel-grid marker from pixels decoded by the from-scratch T.4/T.6
-    codec (must match q_ccitt_scan_ocr)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_ccitt_scan_rows
-    rows = gen_ccitt_scan_rows()
-    pages = page_frame(rows)
-    pages["ocr_md5"] = [
-        hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
-        for t in pages["page_text"]
-    ]
-    golden = pages[
-        ["url", "page", "ocr_md5", "needs_ocr", "status"]
-    ].sort_values(["url", "page"], kind="mergesort").reset_index(drop=True)
-    golden.to_parquet(
-        os.path.join(FIXTURES, "ccitt_scan_ocr_golden.parquet"), index=False
-    )
-    return golden
+# goldens built from gen_rows: they need the reference sample PDF
+GEN_ROWS_GOLDENS = {
+    "blocks", "link_edges", "rasters", "orientation", "extract_corpus",
+    "pages_table", "lineage_totals", "lineage_parts", "pipeline_e2e",
+    "multimodal_frames", "sink_overlay",
+}
 
 
-def freeze_ccitt_rasters() -> pd.DataFrame:
-    """Golden for the rasterizer over CCITT content: the raster UDF body
-    over the fax scan corpus — full-bitmap md5 pins the T.6 decoder's
-    output pixel-for-pixel (must match q_ccitt_scan_raster)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_ccitt_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_rasters_batch
-
-    rows = gen_ccitt_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) for r in rows]}
-    )
-    out = pd.concat(list(extract_rasters_batch(iter([batch]))), ignore_index=True)
-    golden = out.sort_values(
-        ["url", "page_num"], kind="mergesort"
-    ).reset_index(drop=True)
-    golden.to_parquet(
-        os.path.join(FIXTURES, "ccitt_rasters_golden.parquet"), index=False
-    )
-    return golden
-
-
-def freeze_jpx_scan_ocr() -> pd.DataFrame:
-    """Golden for the JPEG 2000 scan branch: extract+OCR UDF bodies run
-    in-process over gen_jpx_scan_rows() — the stub recognizes the
-    pixel-grid marker from pixels decoded by the from-scratch EBCOT/5-3
-    codec (must match q_jpx_scan_ocr)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jpx_scan_rows
-    rows = gen_jpx_scan_rows()
-    pages = page_frame(rows)
-    pages["ocr_md5"] = [
-        hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
-        for t in pages["page_text"]
-    ]
-    golden = pages[
-        ["url", "page", "ocr_md5", "needs_ocr", "status"]
-    ].sort_values(["url", "page"], kind="mergesort").reset_index(drop=True)
-    golden.to_parquet(
-        os.path.join(FIXTURES, "jpx_scan_ocr_golden.parquet"), index=False
-    )
-    return golden
-
-
-def freeze_jpx_rasters() -> pd.DataFrame:
-    """Golden for the rasterizer over JPXDecode content: the raster UDF
-    body over the JPEG 2000 scan corpus — full-bitmap md5 pins the
-    EBCOT decode + inverse DWT pixel-for-pixel (must match
-    q_jpx_scan_raster)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jpx_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_rasters_batch
-
-    rows = gen_jpx_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) for r in rows]}
-    )
-    out = pd.concat(list(extract_rasters_batch(iter([batch]))), ignore_index=True)
-    golden = out.sort_values(
-        ["url", "page_num"], kind="mergesort"
-    ).reset_index(drop=True)
-    golden.to_parquet(
-        os.path.join(FIXTURES, "jpx_rasters_golden.parquet"), index=False
-    )
-    return golden
-
-
-
-def freeze_jbig2_scan_ocr() -> pd.DataFrame:
-    """Golden for the JBIG2 scan branch: extract+OCR UDF bodies run
-    in-process over gen_jbig2_scan_rows() — the stub recognizes the
-    pixel-grid marker from pixels decoded by the from-scratch
-    generic-region codec (must match q_jbig2_scan_ocr)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jbig2_scan_rows
-    rows = gen_jbig2_scan_rows()
-    pages = page_frame(rows)
-    pages["ocr_md5"] = [
-        hashlib.md5((t if isinstance(t, str) else "").encode("utf-8")).hexdigest()
-        for t in pages["page_text"]
-    ]
-    golden = pages[
-        ["url", "page", "ocr_md5", "needs_ocr", "status"]
-    ].sort_values(["url", "page"], kind="mergesort").reset_index(drop=True)
-    golden.to_parquet(
-        os.path.join(FIXTURES, "jbig2_scan_ocr_golden.parquet"), index=False
-    )
-    return golden
-
-
-def freeze_jbig2_rasters() -> pd.DataFrame:
-    """Golden for the rasterizer over JBIG2Decode content: the raster
-    UDF body over the JBIG2 scan corpus — full-bitmap md5 pins the
-    template-0/TPGDON decode pixel-for-pixel (must match
-    q_jbig2_scan_raster)."""
-    from pdf_ocr_spark.fixtures.genpages import gen_jbig2_scan_rows
-    from pdf_ocr_spark.pipeline.extract_job import extract_rasters_batch
-
-    rows = gen_jbig2_scan_rows()
-    batch = pd.DataFrame(
-        {"url": [r["url"] for r in rows],
-         "html": [bytes(r["html"]) for r in rows]}
-    )
-    out = pd.concat(list(extract_rasters_batch(iter([batch]))), ignore_index=True)
-    golden = out.sort_values(
-        ["url", "page_num"], kind="mergesort"
-    ).reset_index(drop=True)
-    golden.to_parquet(
-        os.path.join(FIXTURES, "jbig2_rasters_golden.parquet"), index=False
-    )
-    return golden
-
+def golden_frame(name: str) -> pd.DataFrame:
+    """Golden ``name`` computed in-process."""
+    if name in ROUTE_GOLDENS:
+        return route_frame(ROUTE_GOLDENS[name])
+    return FRAMES[name]()
 
 
 if __name__ == "__main__":
-    require_reference_pdf()
-    for name, fn in [
-        ("blocks", freeze_blocks),
-        ("extract_corpus", freeze_extract_corpus),
-        ("pages_table", freeze_pages_table),
-        ("lineage_totals", freeze_lineage_totals),
-        ("lineage_parts", freeze_lineage_parts),
-        ("pipeline_e2e", freeze_pipeline_e2e),
-        ("link_edges", freeze_link_edges),
-        ("multimodal_frames", freeze_multimodal_frames),
-        ("sink_overlay", freeze_sink_overlay),
-        ("rasters", freeze_rasters),
-        ("orientation", freeze_orientation),
-        ("jpeg_scan_ocr", freeze_jpeg_scan_ocr),
-        ("jpeg_rasters", freeze_jpeg_rasters),
-        ("ccitt_scan_ocr", freeze_ccitt_scan_ocr),
-        ("ccitt_rasters", freeze_ccitt_rasters),
-        ("jpx_scan_ocr", freeze_jpx_scan_ocr),
-        ("jpx_rasters", freeze_jpx_rasters),
-        ("jbig2_scan_ocr", freeze_jbig2_scan_ocr),
-        ("jbig2_rasters", freeze_jbig2_rasters),
-    ]:
-        df = fn()
+    names = sys.argv[1:] or [*ROUTE_GOLDENS, *FRAMES]
+    unknown = [n for n in names if n not in ROUTE_GOLDENS and n not in FRAMES]
+    if unknown:
+        sys.exit(f"unknown golden(s): {' '.join(unknown)}")
+    if GEN_ROWS_GOLDENS.intersection(names):
+        require_reference_pdf()
+    for name in names:
+        df = golden_frame(name)
+        df.to_parquet(os.path.join(FIXTURES, f"{name}_golden.parquet"), index=False)
         print(f"{name}: {len(df)} rows frozen")
