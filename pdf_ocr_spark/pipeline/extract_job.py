@@ -30,7 +30,7 @@ boilerplate-stripped main text with no page headers — HTML is unpaginated).
 from __future__ import annotations
 
 import os
-from functools import partial
+from functools import partial, wraps
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,7 +76,7 @@ DOC_SCHEMA_COLS = [
 ]
 
 
-_GC_TUNED = False
+_WORKER_TUNED = False
 
 # page-count tables persisted by extract_documents_split (the count pass
 # feeds both the ranges join and the failed-giants join); bounded to the
@@ -126,21 +126,59 @@ def looks_like_pdf(data: bytes) -> bool:
     )
 
 
-def _tune_worker_gc() -> None:
-    """Once per executor python worker: freeze the post-import heap out of
-    the cyclic collector and raise its thresholds.  The kernels allocate
-    millions of small acyclic objects (glyph tuples, token lists); with
-    default thresholds the cyclic GC rescans the heap constantly — pure
-    memory-bandwidth waste that measurably halves many-core throughput
-    (cycles are still collected, just at 200k-allocation granularity)."""
-    global _GC_TUNED
-    if _GC_TUNED:
+def _tune_worker() -> None:
+    """Once per executor python worker, before its first batch:
+
+    * freeze the post-import heap out of the cyclic collector and raise
+      its thresholds.  The kernels allocate millions of small acyclic
+      objects (glyph tuples, token lists); with default thresholds the
+      cyclic GC rescans the heap constantly — pure memory-bandwidth waste
+      that measurably halves many-core throughput (cycles are still
+      collected, just at 200k-allocation granularity);
+    * make the per-task ``importlib.invalidate_caches()`` cheap
+      (:func:`_stat_gated_zip_invalidation`)."""
+    global _WORKER_TUNED
+    if _WORKER_TUNED:
         return
     import gc
 
     gc.freeze()
     gc.set_threshold(200_000, 100, 100)
-    _GC_TUNED = True
+    _stat_gated_zip_invalidation()
+    _WORKER_TUNED = True
+
+
+def _stat_gated_zip_invalidation() -> None:
+    """PySpark's worker calls ``importlib.invalidate_caches()`` at the
+    start of every task.  Before CPython 3.13 each ``zipimporter`` then
+    re-reads its archive's whole central directory at once, and a worker
+    holds a dozen importers over ``pyspark.zip`` (1,300+ entries): about
+    0.2 s of CPU per task before the UDF runs, however few rows the task
+    has (CPython 3.11, PySpark 4.1, 4-vCPU VM).  This backports 3.13's
+    lazy behaviour in a cheaper form: an importer re-reads only when its
+    archive's (mtime, size) differs from the stat taken before its last
+    read; if ``stat`` fails, it falls back to the stock re-read.  3.13+
+    is left alone."""
+    import sys
+
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    stock = zipimport.zipimporter.invalidate_caches
+
+    @wraps(stock)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return stock(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        if self.__dict__.get("_read_stamp") != stamp:
+            stock(self)
+            self._read_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 DOC_SCHEMA = StructType(
@@ -280,7 +318,7 @@ def _parsed_batches(batches, ranged: bool = False):
     """Run the core over Arrow batches of (url, html[, page_lo, page_hi]),
     yielding ``(input batch, doc records)``; the OCR engine is made once
     per python worker, on the first batch that needs it."""
-    _tune_worker_gc()
+    _tune_worker()
     engine = None
     for rb in batches:
         ranges = (
@@ -363,7 +401,7 @@ def kernel_arrow(row_fn, schema: StructType, accept, batches):
     batches — bind the first three arguments with ``functools.partial``:
     one ``schema`` row per yielded ``row_fn`` row, prefixed with its
     document's key."""
-    _tune_worker_gc()
+    _tune_worker()
     for rb in batches:
         keys = rb.column(0).to_pylist()
         pairs = _kernel_rows(row_fn, accept, rb.column(1).to_pylist())
@@ -431,7 +469,7 @@ def extract_blocks_arrow(batches):
     from pdf_ocr_spark.kernels.ocr_stub import OCR_MIN_CONFIDENCE, get_engine
     from pdf_ocr_spark.kernels.pdf.extract import extract_pdf
 
-    _tune_worker_gc()
+    _tune_worker()
     engine = None
     for rb in batches:
         rows = []
@@ -1051,7 +1089,7 @@ def count_pages_arrow(batches):
     of :func:`extract_documents_split`."""
     from pdf_ocr_spark.kernels.pdf.extract import count_pdf_pages
 
-    _tune_worker_gc()
+    _tune_worker()
     for rb in batches:
         rows = [
             (url, count_pdf_pages(data if data is not None else b""))

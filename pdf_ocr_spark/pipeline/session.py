@@ -8,7 +8,11 @@ cluster); every setting below is the one you'd ship in spark-defaults on a
   * Arrow on, with a small ``maxRecordsPerBatch`` — rows carry multi-MB
     PDF payloads, so batches are sized by bytes-in-flight, not row count
   * python worker reuse on, so kernel/module init (and, in production, an
-    OCR model) happens once per executor python worker
+    OCR model) happens once per executor python worker, not once per
+    task.  What PySpark still does per task, ``importlib.invalidate_caches()``,
+    is near free on CPython < 3.13 after the worker set-up's stat-gated
+    zipimport re-read (``extract_job._tune_worker``); without it, every
+    task re-read ``pyspark.zip``'s directory once per cached importer
 """
 
 from __future__ import annotations

@@ -12,10 +12,11 @@ Scale notes: parallelism is per-FILE (binaryFile does not split inside
 an archive) — Common Crawl ships ~1 GB segments in the tens of
 thousands per crawl, so file-granular parallelism saturates any
 cluster; a segment parses streamingly (one record in memory at a time).
-``.warc.gz`` members are handled by a multi-member zlib loop (CC
-compresses each record as its own gzip member precisely so readers can
-stream).  Malformed records are skipped, never raised (poison-row
-promise); truncated tails yield the records before the truncation.
+``.warc.gz`` members are inflated one at a time in linear time over the
+segment (``_iter_gzip_members``; CC compresses each record as its own
+gzip member precisely so readers can stream).  Malformed records are
+skipped, never raised (poison-row promise); truncated tails yield the
+records before the truncation.
 """
 
 from __future__ import annotations
@@ -26,24 +27,57 @@ from typing import Iterator, List, Optional, Tuple
 _CRLF2 = b"\r\n\r\n"
 
 
-def _iter_gzip_members(data: bytes) -> Iterator[bytes]:
-    """Yield each gzip member of a .warc.gz archive decompressed ONE AT A
-    TIME — Common Crawl gzips every record as its own member, so this is
-    record-at-a-time streaming: peak memory is one decompressed record
-    (plus the compressed blob), never the whole ~4-5 GB segment."""
-    pos = 0
+_FIRST_WINDOW = 16 << 10
+
+
+def _iter_gzip_members(data: bytes) -> Iterator[Tuple[int, int, bytes]]:
+    """Yield (offset, compressed length, decompressed bytes) for each gzip
+    member of a .warc.gz archive, ONE AT A TIME — Common Crawl gzips every
+    record as its own member, so this is record-at-a-time streaming.
+
+    zlib reads each member through ``memoryview`` windows of the archive
+    (no copy) that start at twice the previous member's compressed size
+    and double until the member ends, so the bytes handed to zlib stay a
+    small multiple of the archive size and its ``unused_data`` copies at
+    most one window.  Peak memory on top of the compressed blob is one
+    decompressed member (two while a many-window member's pieces are
+    joined) plus one window, never a copy of the segment.
+
+    A truncated last member yields what it decoded, with its length
+    running to the end of the archive; a corrupt member, or a tail that
+    is not a gzip member, ends the scan."""
+    view = memoryview(data)
     n = len(data)
+    pos = 0
+    window = _FIRST_WINDOW
     while pos < n and data[pos : pos + 2] == b"\x1f\x8b":
         d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
+        parts = []
+        end = pos
         try:
-            chunk = d.decompress(data[pos:])
+            while not d.eof and end < n:
+                stop = min(n, end + window)
+                parts.append(d.decompress(view[end:stop]))
+                end = stop
+                window *= 2
         except zlib.error:
-            break  # truncated/corrupt member: keep what decoded
-        yield chunk
-        rest = d.unused_data
-        if not rest:
-            break
-        pos = n - len(rest)
+            return  # corrupt member: keep the members before it
+        length = end - pos - len(d.unused_data)
+        yield pos, length, b"".join(parts)
+        if not d.eof:
+            return  # truncated member: nothing follows it
+        pos += length
+        window = 2 * length
+
+
+def _slabs(data: bytes) -> Iterator[bytes]:
+    """An archive's uncompressed record slabs: each gzip member of a
+    .warc.gz in turn, or the whole of a plain archive."""
+    if data[:2] == b"\x1f\x8b":
+        for _, _, member in _iter_gzip_members(data):
+            yield member
+    else:
+        yield data
 
 
 def _parse_headers(block: bytes) -> dict:
@@ -104,11 +138,8 @@ def iter_warc_records(
     the scan rather than raising.  Gzipped archives decompress
     member-by-member (one record in memory at a time, see
     ``_iter_gzip_members``)."""
-    if data[:2] == b"\x1f\x8b":
-        for member in _iter_gzip_members(data):
-            yield from _iter_records_plain(member)
-        return
-    yield from _iter_records_plain(data)
+    for slab in _slabs(data):
+        yield from _iter_records_plain(slab)
 
 
 def _iter_records_plain(
@@ -146,6 +177,9 @@ def warc_pages_batch(batches):
     """mapInPandas body: binaryFile rows (path, content) → page rows."""
     import pandas as pd
 
+    from pdf_ocr_spark.pipeline.extract_job import _tune_worker
+
+    _tune_worker()
     for b in batches:
         rows: List[tuple] = []
         for blob in b["content"]:
@@ -456,20 +490,9 @@ def cdx_records(data: bytes, filename: str = "") -> List[tuple]:
         )
 
     if data[:2] == b"\x1f\x8b":
-        pos = 0
-        n = len(data)
-        while pos < n and data[pos : pos + 2] == b"\x1f\x8b":
-            d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
-            try:
-                chunk = d.decompress(data[pos:])
-            except zlib.error:
-                break
-            member_len = (n - pos) - len(d.unused_data)
+        for pos, member_len, chunk in _iter_gzip_members(data):
             for _, _, headers, payload in _iter_records_meta(chunk):
                 emit(pos, member_len, headers, payload)
-            if not d.unused_data:
-                break
-            pos = n - len(d.unused_data)
     else:
         for off, ln, headers, payload in _iter_records_meta(data):
             emit(off, ln, headers, payload)
@@ -551,15 +574,9 @@ def redirect_records(data: bytes) -> List[tuple]:
     raw Location, absolutized target) for every 3xx response record
     that carries a Location header.  Malformed records skip."""
 
-    def gen() -> Iterator[Tuple[int, int, dict, bytes]]:
-        if data[:2] == b"\x1f\x8b":
-            for member in _iter_gzip_members(data):
-                yield from _iter_records_meta(member)
-        else:
-            yield from _iter_records_meta(data)
-
     rows: List[tuple] = []
-    for _, _, headers, payload in gen():
+    records = (rec for slab in _slabs(data) for rec in _iter_records_meta(slab))
+    for _, _, headers, payload in records:
         if headers.get("warc-type", "").lower() != "response":
             continue
         uri = headers.get("warc-target-uri", "")
@@ -679,12 +696,7 @@ def warc_to_wat_bytes(data: bytes) -> Tuple[int, bytes]:
     identical WAT archives, the same resume/diff property as the
     writer."""
     recs: List[bytes] = []
-    slabs: Iterator[bytes]
-    if data[:2] == b"\x1f\x8b":
-        slabs = _iter_gzip_members(data)
-    else:
-        slabs = iter((data,))
-    for slab in slabs:
+    for slab in _slabs(data):
         for _, _, headers, payload in _iter_records_meta(slab):
             rtype = headers.get("warc-type", "").lower()
             uri = headers.get("warc-target-uri", "")
@@ -748,12 +760,7 @@ def wat_rows(data: bytes) -> List[tuple]:
     import json
 
     rows: List[tuple] = []
-    slabs: Iterator[bytes]
-    if data[:2] == b"\x1f\x8b":
-        slabs = _iter_gzip_members(data)
-    else:
-        slabs = iter((data,))
-    for slab in slabs:
+    for slab in _slabs(data):
         for _, _, headers, payload in _iter_records_meta(slab):
             if headers.get("warc-type", "").lower() != "metadata":
                 continue
@@ -990,12 +997,7 @@ def http_header_records(
     repeated headers join with ', ', and records without the header
     yield ''."""
     out: List[Tuple[str, Optional[str], int, str]] = []
-    chunks = (
-        list(_iter_gzip_members(data))
-        if data[:2] == b"\x1f\x8b"
-        else [data]
-    )
-    for chunk in chunks:
+    for chunk in _slabs(data):
         pos = 0
         n = len(chunk)
         while pos < n:

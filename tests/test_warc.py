@@ -5,6 +5,7 @@ route end-to-end into the extraction pipeline."""
 
 import gzip
 import os
+import random
 
 from pdf_ocr_spark.sources.warc import iter_warc_records, warc_to_pages
 
@@ -62,8 +63,14 @@ def test_iter_warc_records_plain():
 
 
 def test_iter_warc_records_gzip_members():
-    # CC layout: each record its own gzip member, concatenated
-    plain = _archive()
+    gz = _gz_members_archive(_archive())
+    assert [u for u, _, _ in iter_warc_records(gz)] == [
+        "http://a.test/", "http://b.test/", "http://c.test/gz", "http://d.test/raw"
+    ]
+
+
+def _gz_members_archive(plain: bytes) -> bytes:
+    """Common Crawl layout: each record its own gzip member, concatenated."""
     members = []
     pos = 0
     while pos < len(plain):
@@ -71,13 +78,34 @@ def test_iter_warc_records_gzip_members():
         nxt = len(plain) if nxt < 0 else nxt
         members.append(gzip.compress(plain[pos:nxt]))
         pos = nxt
-    gz = b"".join(members)
-    assert [u for u, _, _ in iter_warc_records(gz)] == [
-        "http://a.test/", "http://b.test/", "http://c.test/gz", "http://d.test/raw"
-    ]
+    return b"".join(members)
+
+
+def _quadratic_members(data: bytes):
+    """The straightforward member loop the reader must agree with:
+    inflate from each member's start to the end of the archive, then
+    resume after zlib's ``unused_data``."""
+    import zlib
+
+    out = []
+    pos = 0
+    n = len(data)
+    while pos < n and data[pos : pos + 2] == b"\x1f\x8b":
+        d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
+        try:
+            chunk = d.decompress(data[pos:])
+        except zlib.error:
+            break
+        out.append((pos, (n - pos) - len(d.unused_data), chunk))
+        if not d.unused_data:
+            break
+        pos = n - len(d.unused_data)
+    return out
 
 
 def test_truncated_and_garbage_archives_never_raise():
+    from pdf_ocr_spark.sources.warc import _iter_gzip_members
+
     arc = _archive()
     for cut in (0, 10, 100, len(arc) // 2, len(arc) - 3):
         list(iter_warc_records(arc[:cut]))  # must not raise
@@ -86,6 +114,80 @@ def test_truncated_and_garbage_archives_never_raise():
     # bad content-length recovers at the next record boundary
     broken = arc.replace(b"Content-Length: ", b"Content-Length: x", 1)
     assert len(list(iter_warc_records(broken))) >= 3
+
+    # gzip-member archives cut, corrupted and junk-tailed: members and
+    # records as the quadratic loop.  The 40 KB incompressible record
+    # after small ones is inflated through several doubling windows.
+    big = _record(b"response", b"http://big.test/",
+                  _http(random.Random(5).randbytes(40_000)))
+    gz = _gz_members_archive(arc + big + arc)
+    starts = [pos for pos, _, _ in _quadratic_members(gz)]
+    assert len(starts) == 13
+    cuts = set(range(0, starts[2])) | set(range(0, len(gz) + 1, 97))
+    for start in starts:
+        cuts |= set(range(max(0, start - 3), start + 24))
+    cuts |= set(range(len(gz) - 40, len(gz) + 1))
+    variants = [gz[:cut] for cut in sorted(cuts)]
+    for at in (starts[3] + 20, starts[6] + 30_000):  # small member; late in big
+        variants.append(gz[:at] + bytes([gz[at] ^ 0xFF]) + gz[at + 1 :])
+        variants.append(gz[:at] + b"\x00" * 16 + gz[at + 16 :])
+    variants += [
+        gz + b"trailing junk, not gzip",
+        gz + b"\x1f\x8b" + b"\x00" * 40,
+        gz + b"\x1f\x8b",
+        gz + b"\x00" * 4096,
+    ]
+    for v in variants:
+        assert list(_iter_gzip_members(v)) == _quadratic_members(v)
+        want = [
+            rec
+            for _, _, chunk in _quadratic_members(v)
+            for rec in iter_warc_records(chunk)
+        ]
+        assert list(iter_warc_records(v)) == want
+
+
+def test_gzip_members_inflate_in_linear_time(monkeypatch):
+    """Each byte of a 2,000-member archive reaches zlib a bounded number
+    of times: inflating from every member's start to the archive's end
+    hands zlib ~1,000x the archive instead."""
+    import zlib
+
+    from pdf_ocr_spark.sources import warc
+
+    rng = random.Random(7)
+    plain = b"".join(
+        _record(b"response", b"http://m.test/%d" % i,
+                _http(bytes(rng.getrandbits(8) for _ in range(rng.randint(20, 400)))))
+        for i in range(2000)
+    )
+    gz = _gz_members_archive(plain)
+    handed = []
+
+    class Counting:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def decompress(self, buf, *args):
+            handed.append(len(buf))
+            return self._inner.decompress(buf, *args)
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    class CountingZlib:
+        def __getattr__(self, name):
+            return getattr(zlib, name)
+
+        @staticmethod
+        def decompressobj(*args, **kwargs):
+            return Counting(zlib.decompressobj(*args, **kwargs))
+
+    monkeypatch.setattr(warc, "zlib", CountingZlib())
+    members = list(warc._iter_gzip_members(gz))
+    assert len(members) == 2000
+    assert b"".join(chunk for _, _, chunk in members) == plain
+    assert sum(handed) <= 4 * len(gz)
 
 
 def test_wet_conversion_records():
